@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from aleph2_contrib_spark.functions.query import (
     MultiQuery,
+    Q,
     SingleQuery,
     apply_query,
     compile_query,
@@ -105,7 +106,14 @@ class CrudService:
 
     # -- read surface (C1-C3, C17-C18) ------------------------------------
     def get_object_by_id(self, oid: Any, id_field: str = "_id") -> dict | None:
-        rows = self.df.filter(F.col(id_field) == F.lit(oid)).limit(1).collect()
+        if self.table is not None:
+            # only the files whose log metadata (partition values, zone
+            # maps, Blooms) admits the id — a single-row lookup, not a scan
+            # of the whole snapshot
+            df = self.table.read_pruned(Q.all_of().when(id_field, oid))
+        else:
+            df = self.df
+        rows = df.filter(F.col(id_field) == F.lit(oid)).limit(1).collect()
         return rows[0].asDict(recursive=True) if rows else None
 
     def get_object_by_spec(self, spec) -> dict | None:
@@ -269,8 +277,6 @@ class CrudService:
 
     def delete_object_by_id(self, oid: Any, id_field: str = "_id") -> None:
         if self.table is not None:
-            from aleph2_contrib_spark.functions.query import Q
-
             self.table.delete_by_spec(Q.all_of().when(id_field, oid))
         else:
             self._rewrite(self.df.filter(F.col(id_field) != F.lit(oid)))

@@ -1468,9 +1468,12 @@ def _containment_pairs_driver(
         for t in st[:plen]:
             if max_shingle_freq is None or tf[t] <= max_shingle_freq:
                 cand.update(postings[t])
-        cand.discard(i)
         sa = sets[i]
         for j in sorted(cand):
+            # the distributed join's id_a != id_b: skips the row itself and
+            # any other row carrying the same id
+            if ids[j] == ids[i]:
+                continue
             inter = len(sa & sets[j])
             if inter * 1000 >= tau * n:
                 out["id_a"].append(ids[i])

@@ -3122,6 +3122,11 @@ GROUP BY m.a
 """
 
 
+# σ bound of the driver path of shortest_path_counts: past it an int64
+# sum of path counts could wrap.
+_SIGMA_MAX = float(2**62)
+
+
 def shortest_path_counts(
     edges: DataFrame,
     seeds: DataFrame,
@@ -3142,7 +3147,8 @@ def shortest_path_counts(
     min/sum — no tie-breaking, no floats. σ can grow like degreeᵈᵉᵖᵗʰ;
     int64 holds depth·log₂(deg) < 63 — size ``max_depth`` (and the
     graph's hub degree) accordingly, the same contract the f6 operators
-    carry for magnitudes.
+    carry for magnitudes. The driver path raises OverflowError once a
+    count passes 2^62 instead of letting an int64 sum wrap.
 
     Plan shape: identical wavefront discipline to :func:`bfs_levels`
     (whose docstring carries the reference-parity note): the edge table
@@ -3211,6 +3217,13 @@ def shortest_path_counts(
             t2, w2 = targets[unreached], wts[unreached]
             if len(t2) == 0:
                 break
+            # int64 σ sums wrap silently: bound each level's sums in float
+            # first (exact enough this far below 2^63) and refuse to wrap
+            if np.bincount(t2, weights=w2.astype(np.float64)).max() > _SIGMA_MAX:
+                raise OverflowError(
+                    f"shortest_path_counts: a shortest-path count at depth {depth} "
+                    f"exceeds 2^62 and would overflow int64 — lower max_depth"
+                )
             acc = np.zeros(nv, dtype=np.int64)
             np.add.at(acc, t2, w2)
             newly = np.unique(t2)

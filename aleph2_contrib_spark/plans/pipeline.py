@@ -140,6 +140,22 @@ class Pipeline:
     ) -> dict[str, DataFrame]:
         """Execute the DAG; returns {stage_name: DataFrame} for terminal
         stages only (P12 — intermediate stages are transient)."""
+        terminals = self.terminals()
+        return {n: df for n, df in self.resolve(spark, inputs, observe_stats).items() if n in terminals}
+
+    def terminals(self) -> set[str]:
+        """P12: the stages nothing depends on — the ones ``run`` emits."""
+        depended_on = {d for s in self.stages for d in s.dependencies}
+        return {s.name for s in self.stages if s.name not in depended_on}
+
+    def resolve(
+        self,
+        spark: SparkSession,
+        inputs: dict[str, DataFrame],
+        observe_stats: bool = False,
+    ) -> dict[str, DataFrame]:
+        """Every stage's output DataFrame, in topological order (each
+        stage after the stages it reads)."""
         errors = []
         for st in self.stages:
             for m in (st.module, st.combine_module):
@@ -188,10 +204,7 @@ class Pipeline:
             raise ValueError(
                 f"pipeline has unresolvable dependencies: {[s.name for s in remaining]}"
             )
-
-        # P12: only stages nothing depends on are emitted
-        depended_on = {d for s in self.stages for d in s.dependencies}
-        return {n: df for n, df in resolved.items() if n not in depended_on}
+        return resolved
 
     # ------------------------------------------------------------------
     def _apply_stage(

@@ -11,29 +11,58 @@ supplies predicate/projection pushdown into the scan.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
 # Analyzed-reader cache: spark.read.parquet() costs ~90 ms of driver-side
 # footer/schema resolution per call, and a 300-query bench pass makes 350+
-# such calls against the same handful of immutable paths. Caching the
-# *DataFrame object* (an unexecuted plan) per (session, path) removes that
-# fixed cost without persisting any data — every action still scans the
-# parquet files. Keyed weakly on the session so stopped sessions release
-# their entries; keyed on the absolute path so distinct SF dirs never mix.
-_reader_cache: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
+# such calls against the same handful of paths. Caching the *DataFrame
+# object* (an unexecuted plan) per (session, path) removes that fixed cost
+# without persisting any data — every action still scans the parquet
+# files. Keyed on the absolute path so distinct SF dirs never mix.
+class _SessionReaderCache:
+    """session → {abs path: (fingerprint, DataFrame)}.
+
+    Each session's map is an attribute of the session itself. A cached
+    DataFrame holds its session, so a map kept outside the session — even
+    a WeakKeyDictionary — would keep every session that ever loaded a
+    table alive; as an attribute, the session, its map and its DataFrames
+    form one cycle that the garbage collector frees together."""
+
+    _ATTR = "_aleph2_reader_cache"
+
+    def __getitem__(self, spark: SparkSession) -> dict:
+        return vars(spark)[self._ATTR]
+
+    def setdefault(self, spark: SparkSession, default: dict) -> dict:
+        return vars(spark).setdefault(self._ATTR, default)
+
+
+_reader_cache = _SessionReaderCache()
+
+
+def _fingerprint(path: str) -> tuple[int, int] | None:
+    """(mtime, entry count) of a table path: a rewrite of the directory
+    changes it, so a cached reader never serves a stale file listing.
+    None when the path cannot be stat'ed here; such readers are not
+    cached."""
+    try:
+        st = os.stat(path)
+        return st.st_mtime_ns, len(os.listdir(path)) if os.path.isdir(path) else 1
+    except OSError:
+        return None
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     path = os.path.abspath(path)
     per_session = _reader_cache.setdefault(spark, {})
-    df = per_session.get(path)
-    if df is None:
-        df = spark.read.parquet(path)
-        per_session[path] = df
+    fp = _fingerprint(path)
+    hit = per_session.get(path)
+    if hit is not None and fp is not None and hit[0] == fp:
+        return hit[1]
+    df = spark.read.parquet(path)
+    if fp is not None:
+        per_session[path] = (fp, df)
     return df
 
 

@@ -65,6 +65,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Any, Iterable, Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -92,13 +93,43 @@ class ConcurrentModificationError(RuntimeError):
     """A concurrent commit removed files this transaction also rewrites."""
 
 
+# Bloom filters whose log entry records no m/k predate per-file sizing:
+# a standard filter of m=1024 bits probed at k=4 positions, the low 32
+# bits of md5("j:value") mod m for j < k.
+_LEGACY_BLOOM_M = 1024
+_LEGACY_BLOOM_K = 4
+# Every newer filter is blocked: a value sets k=6 bits inside ONE 64-bit
+# word, so the stats job ORs one word per row and value instead of k
+# scattered bits. From x = the first 60 bits of md5(value): word
+# ((x mod 2^16) · m/64) >> 16, bits (x >> 24+6j) & 63 for j < k. m is
+# sized to the file's row count, 12 bits per row (a ~1% false-positive
+# rate for this layout at k=6) in whole words, clamped to [64, 2^20]
+# bits; files past ~87k rows get the capped size and a higher rate.
+# The word depends on x only through x mod 2^16, so the job can OR the
+# words at that resolution before it knows any file's m.
+_BLOOM_K = 6
+_BLOOM_BITS_PER_ROW = 12
+_BLOOM_M_MIN = 64
+_BLOOM_M_MAX = 1 << 20
+_BLOOM_WORD_BITS = 16
+
+
 def _entry_dict(e: "FileEntry") -> dict:
     """JSON form of a FileEntry, shared by commit and checkpoint files."""
     return (
         {"path": e.path, "partition": e.partition}
         | ({"stats": e.stats} if e.stats else {})
         | ({"bloom": e.bloom} if e.bloom else {})
+        | ({"bloom_m": e.bloom_m, "bloom_k": e.bloom_k} if e.bloom and e.bloom_m else {})
         | ({"rows": e.rows} if e.rows is not None else {})
+    )
+
+
+def _entry_from_dict(a: dict) -> "FileEntry":
+    """Inverse of ``_entry_dict``."""
+    return FileEntry(
+        a["path"], a.get("partition", {}), a.get("stats"), a.get("bloom"), a.get("rows"),
+        a.get("bloom_m"), a.get("bloom_k"),
     )
 
 
@@ -115,36 +146,50 @@ class FileEntry:
     # row count (recorded when the write-time stats job runs) — lets an
     # unfiltered COUNT answer from log metadata alone
     rows: int | None = None
+    # the blocked Blooms' size in bits and bits set per value; None = a
+    # legacy 1024-bit, k=4 standard filter
+    bloom_m: int | None = None
+    bloom_k: int | None = None
 
 
-_BLOOM_M = 1024
-_BLOOM_K = 4
-
-
-def _bloom_positions(v: Any) -> list[int] | None:
-    """The k bit positions of a value — md5 double-hash family. Returns
-    None (→ caller must keep the file) for value types whose Python str()
-    can diverge from Spark's cast-to-string used at build time
-    (floats render 1.23E8 vs 123456789.0; timestamps differ in
-    fractional-second padding): Bloom skipping is restricted to
-    int / str / bool keys, where the renderings provably agree."""
+def _bloom_may_contain(e: FileEntry, col: str, v: Any) -> bool:
+    """May file ``e`` hold ``v`` in ``col``, by its Bloom filter? True
+    (→ keep the file) for value types whose Python str() can diverge
+    from Spark's cast-to-string used at build time (floats render
+    1.23E8 vs 123456789.0; timestamps differ in fractional-second
+    padding): Bloom skipping is restricted to int / str / bool keys,
+    where the renderings provably agree."""
     import hashlib
 
     if v is None or not isinstance(v, (int, str, bool)):
-        return None
+        return True
+    bits = int(e.bloom[col], 16)
     s = _pstr(v)
-    return [
-        int(hashlib.md5(f"{j}:{s}".encode()).hexdigest()[:8], 16) % _BLOOM_M
-        for j in range(_BLOOM_K)
-    ]
+    if e.bloom_m is None:
+        return all(
+            bits >> (int(hashlib.md5(f"{j}:{s}".encode()).hexdigest()[:8], 16) % _LEGACY_BLOOM_M) & 1
+            for j in range(_LEGACY_BLOOM_K)
+        )
+    x = int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+    word = bits >> (64 * _bloom_word(x % (1 << _BLOOM_WORD_BITS), e.bloom_m))
+    return all((word >> ((x >> (24 + 6 * j)) & 63)) & 1 for j in range(e.bloom_k))
 
 
-def _bloom_may_contain(hex_bits: str, v: Any) -> bool:
-    pos = _bloom_positions(v)
-    if pos is None:
-        return True  # cannot probe this type safely → cannot skip
-    bits = int(hex_bits, 16)
-    return all((bits >> p) & 1 for p in pos)
+def _bloom_bits(rows: int) -> int:
+    """Blocked-Bloom size m for a file of ``rows`` rows (see _BLOOM_K)."""
+    m = 64 * -(-rows * _BLOOM_BITS_PER_ROW // 64)
+    return min(max(m, _BLOOM_M_MIN), _BLOOM_M_MAX)
+
+
+def _bloom_word(w: int | np.ndarray, m: int) -> int | np.ndarray:
+    """Word of an m-bit blocked Bloom for word index ``w`` at the
+    2^_BLOOM_WORD_BITS resolution the stats job groups on."""
+    return (w * (m // 64)) >> _BLOOM_WORD_BITS
+
+
+def _uri_path(uri: str) -> str:
+    """Local path of a file URI as Spark reports it (input_file_name)."""
+    return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
 
 
 def _pval_matches(dir_val: str | None, lit: Any) -> bool:
@@ -242,13 +287,16 @@ class TransactionalTable:
     gets O(1)-file by-id updates without any partition on id. One extra
     scan of the JUST-WRITTEN files per write pays for it.
 
-    ``bloom_cols`` adds a per-file Bloom filter (m=1024 bits, k=4, md5
-    double hashing) for EQUALITY skipping on columns with no useful
-    ordering — the zone map of an unordered id column spans everything,
-    but its Bloom answers "definitely not in this file" for point
-    lookups/deletes with ~2% false-positive rate at 100 values/file
-    (a false positive only costs reading one extra file). 256 hex chars
-    per column per file in the log.
+    ``bloom_cols`` adds a per-file Bloom filter for EQUALITY skipping on
+    columns with no useful ordering — the zone map of an unordered id
+    column spans everything, but its Bloom answers "definitely not in
+    this file" for point lookups/deletes. Each filter is sized to its
+    file's row count (12 bits per row, ~1% false positives; a false
+    positive only costs reading one extra file) and blocked: a value's
+    k=6 bits share one 64-bit word, one md5 per value. The log records
+    m and k per file, 3 hex chars per row per column (18.8 KB for a
+    6,250-row file); entries without them are the older fixed 1,024-bit,
+    k=4 filters and are probed as such.
     """
 
     def __init__(
@@ -312,13 +360,7 @@ class TransactionalTable:
         return {
             "v": rec["v"],
             "schema": T.StructType.fromJson(json.loads(rec["schema"])) if rec.get("schema") else None,
-            "active": {
-                a["path"]: FileEntry(
-                    a["path"], a.get("partition", {}), a.get("stats"),
-                    a.get("bloom"), a.get("rows"),
-                )
-                for a in rec.get("active", [])
-            },
+            "active": {a["path"]: _entry_from_dict(a) for a in rec.get("active", [])},
             "txn": {k: int(v) for k, v in rec.get("txn", {}).items()},
         }
 
@@ -425,10 +467,7 @@ class TransactionalTable:
         for p in rec.get("remove", []):
             state["active"].pop(p, None)
         for a in rec.get("add", []):
-            state["active"][a["path"]] = FileEntry(
-                a["path"], a.get("partition", {}), a.get("stats"),
-                a.get("bloom"), a.get("rows"),
-            )
+            state["active"][a["path"]] = _entry_from_dict(a)
         t = rec.get("txn")
         if t and t.get("app"):
             state["txn"][t["app"]] = max(
@@ -571,74 +610,92 @@ class TransactionalTable:
             paths.append(f)
         stats, blooms, rows = self._collect_stats(df.schema, paths)
         if rows is not None:  # the stats job actually ran over these files
-            entries = [
-                FileEntry(
-                    e.path,
-                    e.partition,
-                    stats.get(os.path.join(self.root, e.path)),
-                    blooms.get(os.path.join(self.root, e.path)),
-                    # a file absent from the grouped stats job is EMPTY
-                    # (0 rows groups nothing) — record 0, not unknown
-                    rows.get(os.path.join(self.root, e.path), 0),
+            with_stats = []
+            for e in entries:
+                key = os.path.join(self.root, e.path)
+                m, bl = blooms.get(key, (None, None))
+                # a file absent from the grouped stats job is EMPTY (0 rows
+                # groups nothing) — record 0, not unknown
+                with_stats.append(
+                    FileEntry(
+                        e.path, e.partition, stats.get(key), bl, rows.get(key, 0),
+                        m, _BLOOM_K if m else None,
+                    )
                 )
-                for e in entries
-            ]
+            entries = with_stats
         return entries
 
     def _collect_stats(
         self, schema: T.StructType, paths: list[str]
-    ) -> tuple[dict[str, dict[str, list]], dict[str, dict[str, str]], dict[str, int] | None]:
+    ) -> tuple[
+        dict[str, dict[str, list]], dict[str, tuple[int, dict[str, str]]], dict[str, int] | None
+    ]:
         """Per-file [min, max] of every stats column, per-file Bloom bits
         of every bloom column, and per-file row counts, in ONE Spark job
-        over the just-written files only (grouped on input_file_name).
-        Returns ({abs path: {col: [min, max]}}, {abs path: {col:
-        hex_bits}}, {abs path: rows}); columns entirely null in a file are
-        omitted (no metadata → never skipped)."""
+        over the just-written files only. Returns ({abs path: {col: [min,
+        max]}}, {abs path: (m, {col: hex_bits})}, {abs path: rows});
+        columns entirely null in a file are omitted (no metadata → never
+        skipped).
+
+        One aggregation over grouping sets yields both a row per file (row
+        count, zone maps) and a row per (file, bloom column, word index
+        mod 2^16) holding the OR of that index's bits. The word rows come
+        back through Arrow — per file at most min(rows, 2^16), never a
+        per-row list — and the driver folds each file's words into the m
+        its row count gives."""
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
         names = {f.name for f in schema.fields}
         cols = [c for c in self.stats_cols if c in names]
         bcols = [c for c in self.bloom_cols if c in names]
         if (not cols and not bcols) or not paths:
             return {}, {}, None  # job did not run (no configured column present)
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        for c in bcols:
-            pos = F.array(
-                *[
-                    (
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat(F.lit(f"{j}:"), F.col(c).cast("string"))), 1, 8
-                            ),
-                            16,
-                            10,
-                        ).cast("long")
-                        % _BLOOM_M
-                    ).cast("int")
-                    for j in range(_BLOOM_K)
-                ]
+        sel = [F.input_file_name().alias("__f"), *cols]
+        for ci, c in enumerate(bcols):
+            # x = the first 60 bits of md5(value); a NULL value gives a
+            # NULL word and sets no bits — a NULL can never satisfy an
+            # equality term anyway. One SQL expression per column keeps
+            # the plan build to a single gateway call.
+            q = "`" + c.replace("`", "``") + "`"
+            x = f"cast(conv(substring(md5(cast({q} as string)), 1, 15), 16, 10) as bigint)"
+            bit = " | ".join(
+                f"shiftleft(1L, cast(shiftright({x}, {24 + 6 * j}) & 63 as int))" for j in range(_BLOOM_K)
             )
-            # NULL values contribute no bits (collect_list drops the null
-            # entry) — a NULL can never satisfy an equality term anyway
-            aggs.append(
-                F.array_distinct(
-                    F.flatten(F.collect_list(F.when(F.col(c).isNotNull(), pos)))
-                ).alias(f"__bl_{c}")
-            )
-        rows = (
+            sel += [
+                F.expr(f"{x} & {(1 << _BLOOM_WORD_BITS) - 1}").alias(f"__w{ci}"),
+                F.expr(bit).alias(f"__b{ci}"),
+            ]
+        wcols = [f"__w{ci}" for ci in range(len(bcols))]
+        grouped = (
             self.spark.read.schema(schema)
             .parquet(*paths)
-            .groupBy(F.input_file_name().alias("__f"))
-            .agg(*aggs)
-            .collect()
+            .select(*sel)
+            .groupingSets([["__f"]] + [["__f", w] for w in wcols], "__f", *wcols)
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[F.min(c).alias(f"__mn_{c}") for c in cols],
+                *[F.max(c).alias(f"__mx_{c}") for c in cols],
+                *[F.bit_or(f"__b{ci}").alias(f"__b{ci}") for ci in range(len(bcols))],
+                *[F.grouping(w).alias(f"__g{ci}") for ci, w in enumerate(wcols)],
+            )
+        )
+        tbl = grouped.toArrow()
+        grouping = [tbl[f"__g{ci}"].to_numpy(zero_copy_only=False) for ci in range(len(bcols))]
+        is_file = np.ones(tbl.num_rows, dtype=bool)
+        for g in grouping:
+            is_file &= g == 1
+        # the per-file rows through Spark's own Arrow → Row conversion, so
+        # zone-map values have the same Python types as a collect()
+        keep = ["__f", "__n", *[f"__{n}_{c}" for n in ("mn", "mx") for c in cols]]
+        file_rows = ArrowTableToRowsConversion.convert(
+            tbl.filter(is_file).select(keep), T.StructType([grouped.schema[k] for k in keep])
         )
         stats_out: dict[str, dict[str, list]] = {}
-        bloom_out: dict[str, dict[str, str]] = {}
+        bloom_out: dict[str, tuple[int, dict[str, str]]] = {}
         rows_out: dict[str, int] = {}
-        for r in rows:
-            key = urllib.parse.unquote(urllib.parse.urlparse(r["__f"]).path)
-            rows_out[key] = int(r["__rows"])
+        for r in file_rows:
+            key = _uri_path(r["__f"])
+            rows_out[key] = int(r["__n"])
             st = {
                 c: [_stat_json(r[f"__mn_{c}"]), _stat_json(r[f"__mx_{c}"])]
                 for c in cols
@@ -646,16 +703,16 @@ class TransactionalTable:
             }
             if st:
                 stats_out[key] = st
-            bl = {}
-            for c in bcols:
-                positions = r[f"__bl_{c}"]
-                if positions:
-                    bits = 0
-                    for p in positions:
-                        bits |= 1 << p
-                    bl[c] = f"{bits:x}"
-            if bl:
-                bloom_out[key] = bl
+        for ci, c in enumerate(bcols):
+            words = tbl.filter(grouping[ci] == 0).select(["__f", f"__w{ci}", f"__b{ci}"])
+            for uri, grp in words.drop_null().to_pandas().groupby("__f"):
+                key = _uri_path(uri)
+                m = _bloom_bits(rows_out[key])
+                filt = np.zeros(m // 64, dtype="<u8")
+                w, bit = grp[f"__w{ci}"].to_numpy(), grp[f"__b{ci}"].to_numpy()
+                np.bitwise_or.at(filt, _bloom_word(w, m), bit.view(np.uint64))
+                bits = int.from_bytes(filt.tobytes(), "little")
+                bloom_out.setdefault(key, (m, {}))[1][c] = f"{bits:x}"
         return stats_out, bloom_out, rows_out
 
     def count_rows(self) -> int | None:
@@ -743,30 +800,22 @@ class TransactionalTable:
             return self._commit(
                 "merge_by_key", self._write_files(df), [], df.schema, read_version=rv, txn=txn
             )
-        if df.isEmpty():
-            # empty micro-batches are common under foreachBatch — without
-            # this guard the all-NULL key bounds would overlap every file
-            # and the whole table would be rewritten per empty batch
-            return rv
         aligned, merged_schema = self._aligned(df, schema)
-        keys = aligned.select(*key_cols).dropDuplicates(list(key_cols))
-        # zone-map candidate pruning from the incoming keys' bounds
+        # zone-map candidate pruning from the incoming keys' bounds; the
+        # same aggregate tells whether the batch is empty. Empty micro-
+        # batches are common under foreachBatch — without the guard the
+        # all-NULL key bounds would overlap every file and the whole table
+        # would be rewritten per empty batch
         stat_keys = [c for c in key_cols if c in self.stats_cols]
         touched = active
         if stat_keys:
-            bounds = keys.agg(
-                *[F.min(c).alias(f"__lo_{c}") for c in stat_keys],
-                *[F.max(c).alias(f"__hi_{c}") for c in stat_keys],
-            ).collect()[0]
-            touched = [
-                e
-                for e in active
-                if all(
-                    (e.stats or {}).get(c) is None
-                    or _overlaps(e.stats[c], bounds[f"__lo_{c}"], True, bounds[f"__hi_{c}"], True)
-                    for c in stat_keys
-                )
-            ]
+            probe = aligned.agg(F.count(F.lit(1)).alias("__n"), *_bounds_aggs(stat_keys)).first()
+            if probe["__n"] == 0:
+                return rv
+            touched = _overlapping(active, stat_keys, probe)
+        elif df.isEmpty():
+            return rv
+        keys = aligned.select(*key_cols).dropDuplicates(list(key_cols))
         survivors = self.read(files=touched).join(keys, list(key_cols), "left_anti")
         out = survivors.unionByName(aligned, allowMissingColumns=True)
         adds = self._write_files(out)
@@ -815,8 +864,26 @@ class TransactionalTable:
         rv = self.latest_version()
         schema, active = self.snapshot(rv if rv else None)
         txn = {"app": txn_app, "version": txn_version} if txn_app is not None else None
-        if df.isEmpty():
+        # one aggregate answers every pre-write probe: is the batch empty,
+        # does it hold a NULL op, and the keys' bounds for zone-map
+        # candidate pruning (every key of df survives into `last` below)
+        stat_keys = [c for c in key_cols if c in self.stats_cols]
+        probe = df.agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.count(F.when(F.col(op_col).isNull(), 1)).alias("__null_ops"),
+            *_bounds_aggs(stat_keys),
+        ).first()
+        if probe["__n"] == 0:
             return rv
+        # A NULL op must ERROR, not silently act as a delete: the upsert
+        # filter below is three-valued (NULL != delete_value is NULL →
+        # dropped from upserts while its key still evicts the old row).
+        if probe["__null_ops"]:
+            raise ValueError(
+                f"apply_cdc: NULL value in op column {op_col!r} — every CDC "
+                f"row must carry an explicit op (delete rows use "
+                f"{delete_value!r}); refusing to guess"
+            )
         w = Window.partitionBy(*key_cols).orderBy(
             *[F.col(c).desc() for c in seq_cols]
         )
@@ -825,15 +892,6 @@ class TransactionalTable:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        # A NULL op must ERROR, not silently act as a delete: the upsert
-        # filter below is three-valued (NULL != delete_value is NULL →
-        # dropped from upserts while its key still evicts the old row).
-        if df.filter(F.col(op_col).isNull()).limit(1).count() > 0:
-            raise ValueError(
-                f"apply_cdc: NULL value in op column {op_col!r} — every CDC "
-                f"row must carry an explicit op (delete rows use "
-                f"{delete_value!r}); refusing to guess"
-            )
         upserts = last.filter(F.col(op_col) != F.lit(delete_value)).drop(op_col)
         if schema is None:
             return self._commit(
@@ -844,22 +902,7 @@ class TransactionalTable:
         # EVERY changed key evicts its old row (upserts replace, deletes
         # just don't come back) — one anti-join covers both op kinds
         keys = last.select(*key_cols).dropDuplicates(list(key_cols))
-        stat_keys = [c for c in key_cols if c in self.stats_cols]
-        touched = active
-        if stat_keys:
-            bounds = keys.agg(
-                *[F.min(c).alias(f"__lo_{c}") for c in stat_keys],
-                *[F.max(c).alias(f"__hi_{c}") for c in stat_keys],
-            ).collect()[0]
-            touched = [
-                e
-                for e in active
-                if all(
-                    (e.stats or {}).get(c) is None
-                    or _overlaps(e.stats[c], bounds[f"__lo_{c}"], True, bounds[f"__hi_{c}"], True)
-                    for c in stat_keys
-                )
-            ]
+        touched = _overlapping(active, stat_keys, probe) if stat_keys else active
         survivors = self.read(files=touched).join(keys, list(key_cols), "left_anti")
         out = survivors.unionByName(aligned, allowMissingColumns=True)
         adds = self._write_files(out)
@@ -1110,13 +1153,12 @@ class TransactionalTable:
                         if not _overlaps(st, lo, lo_incl, hi, hi_incl):
                             return False
             for col, clist in bloom_cons.items():
-                bl = (e.bloom or {}).get(col)
-                if bl is None:
+                if col not in (e.bloom or {}):
                     continue
                 for con in clist:
                     # the file can match only if SOME candidate value may
                     # be present ("definitely absent" for all → skip)
-                    if not any(_bloom_may_contain(bl, v) for v in con[1]):
+                    if not any(_bloom_may_contain(e, col, v) for v in con[1]):
                         return False
             return True
 
@@ -1387,6 +1429,26 @@ class TransactionalTable:
             if os.path.isdir(d) and not any(os.scandir(d)):
                 shutil.rmtree(d, ignore_errors=True)
         return removed
+
+
+def _bounds_aggs(cols: Sequence[str]) -> list:
+    """[min, max] aggregates of incoming key columns, read by
+    ``_overlapping``."""
+    return [F.min(c).alias(f"__lo_{c}") for c in cols] + [F.max(c).alias(f"__hi_{c}") for c in cols]
+
+
+def _overlapping(active: list[FileEntry], cols: Sequence[str], bounds) -> list[FileEntry]:
+    """The files whose zone maps overlap the incoming keys' bounds on every
+    column of ``cols`` (files without stats for a column are kept)."""
+    return [
+        e
+        for e in active
+        if all(
+            (e.stats or {}).get(c) is None
+            or _overlaps(e.stats[c], bounds[f"__lo_{c}"], True, bounds[f"__hi_{c}"], True)
+            for c in cols
+        )
+    ]
 
 
 def _partition_matches(e: FileEntry, sets: dict[str, set]) -> bool:

@@ -27,6 +27,7 @@ only within the micro-batch.
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -334,13 +335,30 @@ class StreamingPipelineRunner:
     def start(self, stream_df: DataFrame, input_name: str = "stream"):
         spark = stream_df.sparkSession
 
+        terminals = self.pipeline.terminals()
+        readers = Counter(d for st in self.pipeline.stages for d in st.dependencies)
+
         def process(batch_df: DataFrame, batch_id: int) -> None:
             self.batches_seen += 1
             if batch_df.isEmpty():
                 return
-            outputs = self.pipeline.run(spark, {input_name: batch_df})
-            for stage_name, df in outputs.items():
-                self.sink(stage_name, df, batch_id)
+            outputs = self.pipeline.resolve(spark, {input_name: batch_df})
+            # A stage output that a sink or more than one stage reads is
+            # computed once per batch: persisted upstream first, so each
+            # downstream cache is built from its inputs' caches (persisting
+            # a terminal before the stage it reads would cache a plan that
+            # recomputes that stage), and released after the sinks.
+            persisted: list[DataFrame] = []
+            try:
+                for name, df in outputs.items():
+                    if (name in terminals or readers[name] > 1) and all(df is not p for p in persisted):
+                        persisted.append(df.persist())
+                for name, df in outputs.items():
+                    if name in terminals:
+                        self.sink(name, df, batch_id)
+            finally:
+                for df in reversed(persisted):
+                    df.unpersist()
 
         writer = stream_df.writeStream.foreachBatch(process).option(
             "checkpointLocation", self.checkpoint_dir

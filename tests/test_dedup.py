@@ -620,6 +620,25 @@ def test_containment_driver_matches_distributed(spark):
         assert fast == slow, cap
 
 
+def test_containment_skips_pairs_of_one_duplicated_id(spark):
+    """Two rows carrying the same id are one document: neither path may
+    emit an id_a == id_b pair, and both paths agree."""
+    from aleph2_contrib_spark.operators.dedup import containment_pairs
+
+    dup = "alpha beta gamma delta epsilon zeta eta theta"
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame(
+        [(1, dup), (1, dup), (3, text), (4, text + " and then some")], "doc_id long, text string"
+    )
+    driver = {tuple(r) for r in containment_pairs(df, tau_permille=800, ngram=2).collect()}
+    distributed = {
+        tuple(r)
+        for r in containment_pairs(df, tau_permille=800, ngram=2, driver_cap_shingles=0).collect()
+    }
+    assert all(a != b for a, b, *_ in driver | distributed)
+    assert driver == distributed == {(3, 4, 8, 8, 1_000_000)}
+
+
 def test_minhash_pairs_driver_matches_distributed(spark):
     import random
 

@@ -1188,6 +1188,27 @@ def test_shortest_path_counts_diamond(spark):
     assert out == {"a": (0, 1), "b": (1, 1), "c": (1, 1), "d": (2, 2)}
 
 
+def test_shortest_path_counts_refuses_to_wrap_sigma(spark):
+    """A layered complete DAG of width 16 has 16^(d-1) shortest paths to
+    each node of layer d: 2^60 at layer 16 is exact, 2^64 at layer 17
+    would wrap int64 to 0, so the driver path raises instead."""
+    from pyspark.sql import Row
+
+    from aleph2_contrib_spark.operators.graph import shortest_path_counts
+
+    width = 16
+    pairs = [(0, 1 + j) for j in range(width)]
+    for layer in range(1, 17):
+        base = 1 + (layer - 1) * width
+        pairs += [(base + a, base + width + b) for a in range(width) for b in range(width)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    seeds = spark.createDataFrame([Row(node=0)], "node long")
+    out = {r.node: r.sigma for r in shortest_path_counts(edges, seeds, max_depth=16).collect()}
+    assert out[1 + 15 * width] == 2**60
+    with pytest.raises(OverflowError):
+        shortest_path_counts(edges, seeds, max_depth=17)
+
+
 def test_betweenness_path_graph_exact_f6(spark):
     from aleph2_contrib_spark.operators.graph import betweenness_sampled
 

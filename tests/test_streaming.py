@@ -783,3 +783,118 @@ def test_socket_stream_kill_restart_from_checkpoint(spark, tmp_path):
     )
     got = sorted(r.user_id for r in t.read().collect())
     assert got == [1, 2, 3, 4]  # no dup across the restart, no loss
+
+
+# -- each micro-batch computed once ----------------------------------------
+
+from aleph2_contrib_spark.plans.pipeline import EnrichmentModule  # noqa: E402
+
+
+class CountingModule(EnrichmentModule):
+    """Adds ``score`` and counts every row it sees into an accumulator."""
+
+    def on_object_batch(self, batch):
+        self.config["rows"].add(len(batch))
+        return batch.assign(score=batch["a"] * 2)
+
+
+def _fanout_pipeline(acc):
+    return Pipeline(
+        [
+            Stage(
+                "enrich",
+                module=CountingModule({"rows": acc}),
+                output_schema="id LONG, key INT, a LONG, score LONG",
+            ),
+            Stage(
+                "agg",
+                dependencies=("enrich",),
+                sql="SELECT key, COUNT(*) AS n, SUM(score) AS s FROM enrich GROUP BY key",
+            ),
+            Stage("rows", dependencies=("enrich",)),
+        ]
+    )
+
+
+def _stage_files(d, n_files, rows=40):
+    for i in range(n_files):
+        write_batch(
+            d,
+            f"f{i:03d}.json",
+            [{"id": i * rows + j, "key": j % 7, "a": j} for j in range(rows)],
+        )
+        os.utime(os.path.join(d, f"f{i:03d}.json"), (1_000_000 + i, 1_000_000 + i))
+
+
+def test_runner_computes_each_stage_once_per_batch(spark, tmp_path):
+    """Two stages and two sinks reading one module stage: the module sees
+    each input row exactly once per micro-batch, and the stage caches are
+    all released after the batches."""
+    from aleph2_contrib_spark.sources.txlog import TransactionalTable
+    from aleph2_contrib_spark.streaming.runner import transactional_sink
+
+    inbox = str(tmp_path / "inbox")
+    os.makedirs(inbox)
+    _stage_files(inbox, 5)
+    rows_t = TransactionalTable(spark, str(tmp_path / "rows"))
+    agg_t = TransactionalTable(spark, str(tmp_path / "agg"), stats_cols=("key",))
+    sinks = {
+        "rows": transactional_sink(rows_t, "app"),
+        "agg": transactional_sink(agg_t, "app", merge_keys=["key"]),
+    }
+    sc = spark.sparkContext
+    acc = sc.accumulator(0)
+    persistent_before = len(sc._jsc.getPersistentRDDs())
+    runner = StreamingPipelineRunner(
+        _fanout_pipeline(acc),
+        lambda name, df, b: sinks[name](name, df, b),
+        str(tmp_path / "ckpt"),
+    )
+    stream = json_file_stream(spark, inbox, "id LONG, key INT, a LONG", max_files_per_trigger=1)
+    q = runner.start(stream)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 5
+    assert acc.value == 5 * 40
+    assert rows_t.read().count() == 200
+    assert len(sc._jsc.getPersistentRDDs()) <= persistent_before
+
+
+def test_runner_replayed_batch_is_a_noop(spark, tmp_path):
+    """A batch Spark replays from the checkpoint (its commit record lost)
+    runs through the persisted stage outputs again, and the sinks' txn
+    markers still make it a no-op."""
+    from aleph2_contrib_spark.sources.txlog import TransactionalTable
+    from aleph2_contrib_spark.streaming.runner import transactional_sink
+
+    inbox = str(tmp_path / "inbox")
+    os.makedirs(inbox)
+    _stage_files(inbox, 1)
+    rows_t = TransactionalTable(spark, str(tmp_path / "rows"))
+    agg_t = TransactionalTable(spark, str(tmp_path / "agg"), stats_cols=("key",))
+    sinks = {
+        "rows": transactional_sink(rows_t, "app"),
+        "agg": transactional_sink(agg_t, "app", merge_keys=["key"]),
+    }
+    ckpt = str(tmp_path / "ckpt")
+    acc = spark.sparkContext.accumulator(0)
+
+    def run():
+        runner = StreamingPipelineRunner(
+            _fanout_pipeline(acc), lambda name, df, b: sinks[name](name, df, b), ckpt
+        )
+        q = runner.start(json_file_stream(spark, inbox, "id LONG, key INT, a LONG"))
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return runner
+
+    run()
+    versions = (rows_t.latest_version(), agg_t.latest_version())
+    agg_before = sorted(tuple(r) for r in agg_t.read().collect())
+    for name in ("0", ".0.crc"):  # the commit record and its checksum
+        os.remove(os.path.join(ckpt, "commits", name))
+    assert run().batches_seen == 1  # Spark replayed batch 0
+    assert acc.value == 40  # both sinks skipped it: nothing was computed
+    assert (rows_t.latest_version(), agg_t.latest_version()) == versions
+    assert rows_t.read().count() == 40
+    assert sorted(tuple(r) for r in agg_t.read().collect()) == agg_before

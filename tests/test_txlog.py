@@ -1209,3 +1209,144 @@ def test_apply_cdc_prunes_untouched_files_by_zone_map(spark):
     assert any(before[p] == after[p] for p in shared), "low-key file was rewritten"
     got = {r.k: r.val for r in t.read().collect()}
     assert got[101] == "hi101b" and got[0] == "lo0"
+
+
+def test_apply_cdc_empty_batch_commits_nothing(spark):
+    root = tempfile.mkdtemp(prefix="a2s_cdc_")
+    t = TransactionalTable(spark, root, stats_cols=("k",))
+    t.apply_cdc(_cdc(spark, [(1, "a1", "u", 1)]), key_cols=["k"])
+    v = t.latest_version()
+    assert t.apply_cdc(_cdc(spark, []), key_cols=["k"]) == v
+    assert t.latest_version() == v
+
+
+def test_apply_cdc_rewrites_only_files_in_the_key_bounds(spark):
+    """One probe aggregate gives apply_cdc its key bounds: a batch whose
+    keys all lie in one file's zone map leaves the other file as is, and
+    the table ends as the batch's last-writer-wins result."""
+    root = tempfile.mkdtemp(prefix="a2s_cdc_")
+    t = TransactionalTable(spark, root, stats_cols=("k",))
+    t.append(_cdc(spark, [(k, f"a{k}", "u", 0) for k in range(1, 11)]).drop("op").coalesce(1))
+    t.append(_cdc(spark, [(k, f"b{k}", "u", 0) for k in range(100, 111)]).drop("op").coalesce(1))
+    _, before = t.snapshot()
+    far = next(e for e in before if e.stats["k"][0] == 100)
+    t.apply_cdc(
+        _cdc(spark, [(1, "x1", "u", 1), (2, "", "d", 1), (5, "x5", "u", 1), (5, "y5", "u", 2)]),
+        key_cols=["k"],
+    )
+    _, after = t.snapshot()
+    assert far.path in {e.path for e in after}
+    want = {k: f"a{k}" for k in range(1, 11)} | {k: f"b{k}" for k in range(100, 111)}
+    want.update({1: "x1", 5: "y5"})
+    del want[2]
+    assert {r.k: r.val for r in t.read().collect()} == want
+
+
+# -- Bloom sizing -----------------------------------------------------------
+
+
+def _legacy_bloom_hex(values) -> str:
+    """The fixed 1024-bit, k=4 filter logs carried before per-file sizing."""
+    bits = 0
+    for v in values:
+        for j in range(4):
+            bits |= 1 << (int(hashlib.md5(f"{j}:{v}".encode()).hexdigest()[:8], 16) % 1024)
+    return f"{bits:x}"
+
+
+def _legacy_may_contain(hex_bits: str, v) -> bool:
+    bits = int(hex_bits, 16)
+    return all(
+        (bits >> (int(hashlib.md5(f"{j}:{v}".encode()).hexdigest()[:8], 16) % 1024)) & 1
+        for j in range(4)
+    )
+
+
+def test_bloom_sized_to_file_prunes_absent_ids(spark):
+    """A 6,250-row file (the size that saturated the fixed 1,024-bit
+    filter) skips at least 95% of absent-id probes and never a present
+    id."""
+    root = tempfile.mkdtemp(prefix="a2s_txlog_bloomsize_")
+    t = TransactionalTable(spark, root, bloom_cols=("_id",))
+    t.append(
+        spark.range(6250)
+        .select(F.concat(F.lit("r"), F.lpad(F.col("id").cast("string"), 8, "0")).alias("_id"))
+        .coalesce(1)
+    )
+    _, files = t.snapshot()
+    assert len(files) == 1 and files[0].rows == 6250
+    kept = sum(
+        bool(t._prune_files(files, Q.all_of().when("_id", f"x{i:08d}"))) for i in range(1000)
+    )
+    assert kept <= 50, kept
+    for i in range(0, 6250, 25):
+        assert t._prune_files(files, Q.all_of().when("_id", f"r{i:08d}")), i
+
+
+def test_legacy_1024_bit_bloom_entries_still_prune(spark):
+    """A log entry written before per-file sizing (1,024-bit hex, no m/k)
+    prunes exactly as the old filter did."""
+    import json
+
+    root = tempfile.mkdtemp(prefix="a2s_txlog_legacy_")
+    t = TransactionalTable(spark, root, bloom_cols=("event_id",))
+    for start in (0, 1):
+        t.append(
+            spark.range(60).select((F.col("id") * 2 + start).alias("event_id")).coalesce(1)
+        )
+    for log in sorted(glob.glob(os.path.join(root, "_txlog", "0*.json"))):
+        with open(log) as f:
+            rec = json.load(f)
+        for a in rec["add"]:
+            a.pop("bloom_m", None)
+            a.pop("bloom_k", None)
+            ids = [r.event_id for r in spark.read.parquet(os.path.join(root, a["path"])).collect()]
+            a["bloom"] = {"event_id": _legacy_bloom_hex(ids)}
+        with open(log, "w") as f:
+            json.dump(rec, f)
+    cold = TransactionalTable(spark, root, bloom_cols=("event_id",))
+    _, files = cold.snapshot()
+    assert all(e.bloom_m is None for e in files)
+    for v in range(-50, 250):
+        want = sorted(
+            e.path for e in files
+            if _legacy_may_contain(e.bloom["event_id"], v)
+        )
+        got = sorted(e.path for e in cold._prune_files(files, Q.all_of().when("event_id", v)))
+        assert got == want, v
+    # the owning file is always among them
+    assert len(cold._prune_files(files, Q.all_of().when("event_id", 7))) >= 1
+    assert cold.read().filter(F.col("event_id") == 7).count() == 1
+
+
+def test_get_object_by_id_reads_only_files_whose_bloom_admits_it(spark, monkeypatch):
+    """get_object_by_id goes through the log-pruned read: on a 40-file
+    table a lookup scans at most 2 files, not the snapshot."""
+    root = tempfile.mkdtemp(prefix="a2s_txlog_lookup_")
+    t = TransactionalTable(spark, root, bloom_cols=("_id",))
+    t.append(
+        spark.range(4000)
+        .select(
+            F.concat(F.lit("r"), F.col("id").cast("string")).alias("_id"),
+            F.col("id").alias("v"),
+        )
+        .repartition(40)
+    )
+    _, files = t.snapshot()
+    assert len(files) >= 40
+    svc = CrudService(spark, table=t)
+    scanned = []
+    read = t.read
+
+    def spy(*args, **kwargs):
+        df = read(*args, **kwargs)
+        scanned.append(len(df.inputFiles()))
+        return df
+
+    monkeypatch.setattr(t, "read", spy)
+    for i in (0, 17, 1999, 3999):
+        scanned.clear()
+        assert svc.get_object_by_id(f"r{i}") == {"_id": f"r{i}", "v": i}
+        assert scanned and max(scanned) <= 2, scanned
+        assert len(t.read_pruned(Q.all_of().when("_id", f"r{i}")).inputFiles()) <= 2
+    assert svc.get_object_by_id("absent") is None
