@@ -28,6 +28,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .hybrid import collect_under, index_nodes
+
 
 def exact_dedup(
     df: DataFrame,
@@ -1120,8 +1122,10 @@ def connected_components(
     turn pairwise near-dup evidence into dedup clusters (keep one
     representative per component).
 
-    STATS-PROBED HYBRID (the repo's broadcast-or-shuffle discipline): the
-    pair graph is materialized once and counted. A near-dup pair graph is
+    HYBRID (``operators.hybrid``): the pair graph is persisted, and one
+    bounded Arrow collect both probes it against the cap and fetches it
+    (above the cap that collect is the materializing action the
+    distributed path needs anyway). A near-dup pair graph is
     orders of magnitude smaller than its corpus (only documents with a
     close neighbor appear at all), so when it fits the
     ``driver_max_edges`` cap the components are solved exactly with a
@@ -1131,9 +1135,10 @@ def connected_components(
     (min reachable id), asserted in tests.
 
     DRIVER-MEMORY NOTE: the fast path collects up to ``driver_max_edges``
-    edges into Python on the driver — at the 1M default that is on the
-    order of ~100 MB of tuples, sized for the 1 GiB+ drivers typical of
-    analytics clusters. On a memory-constrained driver pass a lower cap;
+    edges onto the driver — at the 1M default that is two Arrow columns
+    (16 MB of longs) plus the union-find's Python lists, sized for the
+    1 GiB+ drivers typical of analytics clusters. On a memory-constrained
+    driver pass a lower cap;
     pass ``driver_max_edges=0`` to DISABLE the driver path entirely and
     force the fully-distributed pointer-jumping loop regardless of size.
 
@@ -1152,13 +1157,19 @@ def connected_components(
     With pointer jumping, the default 25 rounds covers diameters up to
     ~2^25; hitting the error means a pathological graph, not a tuning knob.
     """
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    e = e.localCheckpoint(eager=True)
-    if e.count() <= driver_max_edges:
-        return _union_find_local(e)
+    from pyspark import StorageLevel
+
+    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    pdf = collect_under(e, driver_max_edges)
+    if pdf is not None:
+        e.unpersist()
+        return _union_find_local(pdf, e)
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
+    e.unpersist()
 
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -1215,14 +1226,18 @@ def connected_components(
     )
 
 
-def _union_find_local(e: DataFrame) -> DataFrame:
-    """Exact driver-side components for a capped pair graph: classic
-    union-find with path compression, representatives forced to the MIN
-    node id of each set (so the output contract — component = min
-    reachable id — matches the distributed path bit-for-bit). Input is a
-    materialized (src, dst) DataFrame; output (node, component) keeps the
-    input id type."""
-    parent: dict = {}
+def _union_find_local(pdf, e: DataFrame) -> DataFrame:
+    """Exact driver-side components for a capped pair graph ``pdf``, the
+    collected ``(src, dst)`` frame ``e``: classic union-find with path
+    compression over contiguous node indices, representatives forced to
+    the MIN index of each set. Index order is id order, so the output
+    contract — component = min reachable id — matches the distributed
+    path bit-for-bit. Output (node, component) keeps the input id type."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    nodes, src, dst = index_nodes(pdf["src"], pdf["dst"])
+    parent = list(range(len(nodes)))
 
     def find(x):
         r = x
@@ -1232,25 +1247,21 @@ def _union_find_local(e: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for src, dst in e.collect():
-        if src not in parent:
-            parent[src] = src
-        if dst not in parent:
-            parent[dst] = dst
-        ra, rb = find(src), find(dst)
+    for a, b in zip(src.tolist(), dst.tolist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             # min id becomes the representative — determinism contract
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
 
-    from pyspark.sql import types as T
-
     id_type = e.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("node", id_type), T.StructField("component", id_type)]
     )
-    rows = [(n, find(n)) for n in parent]
-    return e.sparkSession.createDataFrame(rows, schema)
+    comp = [find(i) for i in range(len(nodes))]
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "component": nodes[comp]}), schema
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -34,6 +34,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .hybrid import canonical_edges, collect_under, csr, index_nodes, run_offsets, successors
+
 
 @dataclass(frozen=True)
 class DecompElement:
@@ -421,10 +423,7 @@ def _np_triangle_support(Ai, Bi, nv, need_support: bool, wedge_budget: int = 200
     if total_wedges > wedge_budget:
         return None
     firsts = np.repeat(pos, remaining)
-    offs = np.arange(total_wedges, dtype=np.int64) - np.repeat(
-        np.cumsum(remaining) - remaining, remaining
-    )
-    seconds = firsts + 1 + offs
+    seconds = firsts + 1 + run_offsets(remaining)
     # wedge (u; v1 ≺ v2): closing oriented edge is exactly (v1 → v2)
     wcode = Vs[firsts] * nv64 + Vs[seconds]
     osort = np.sort(Us * nv64 + Vs)
@@ -487,8 +486,11 @@ def triangle_count(
     scheduled task computes its partition from scratch until the cache
     block lands, so the canonicalize+orient subtree runs up to 3x and
     the single-action plan carries ~80 duplicated Exchanges; measured
-    20.4 s -> 11.9 s warm at sf0.1 from materializing both). Blocks are
-    reclaimed by the context cleaner when the result goes out of scope.
+    20.4 s -> 11.9 s warm at sf0.1 from materializing both). On the
+    driver path the canonical list is released before returning; on the
+    distributed path both lists stay cached for the lazy result until the
+    caller unpersists them or clears the cache (the CacheManager holds
+    them, so the context cleaner never reclaims them).
     """
     from pyspark import StorageLevel
 
@@ -501,37 +503,23 @@ def triangle_count(
         # cache (global_graph_stats shares one canonical subtree this
         # way instead of re-deriving it per scalar).
         e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        n_edges = e.limit(driver_cap_edges + 1).count()
     else:
-        a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-        b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
-        e = (
-            edges.select(a, b)
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_edges = e.count()
-    if n_edges <= driver_cap_edges:
+        e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
+    epdf = collect_under(e, driver_cap_edges)
+    if epdf is not None:
         # Hybrid, like bfs_levels/coreness: under the cap the wedge join
-        # costs more in scheduled stages than in work — collect the
-        # canonical edges once and run the SAME degree-ordered orientation
-        # vectorized on the driver (guide §4.1). Falls back to the
-        # distributed join if the orientation's wedge total would blow the
-        # driver-array budget (the m^1.5 worst case the join spills through).
-        import numpy as np
-
-        epdf = e.toPandas()
-        nodes_all, inv = np.unique(
-            np.concatenate([epdf["a"].to_numpy(), epdf["b"].to_numpy()]),
-            return_inverse=True,
-        )
-        ne = len(epdf)
-        got = _np_triangle_support(inv[:ne], inv[ne:], len(nodes_all), need_support=False)
+        # costs more in scheduled stages than in work — run the SAME
+        # degree-ordered orientation vectorized on the driver (guide
+        # §4.1). Falls back to the distributed join if the orientation's
+        # wedge total would blow the driver-array budget (the m^1.5 worst
+        # case the join spills through).
+        nodes, Ai, Bi = index_nodes(epdf["a"], epdf["b"])
+        got = _np_triangle_support(Ai, Bi, len(nodes), need_support=False)
         if got is not None:
-            n_tri, _ = got
+            if not assume_canonical_persisted:
+                e.unpersist()
             return spark.createDataFrame(
-                [(int(len(nodes_all)), int(ne), int(n_tri))],
+                [(len(nodes), len(epdf), int(got[0]))],
                 schema="n_vertices long, n_edges long, n_triangles long",
             )
     deg = (
@@ -621,9 +609,10 @@ def bfs_levels(
     # (≥3 scheduled stages × max_iters) dwarfs the work, so graphs under
     # ``driver_cap_edges`` solve with an exact driver-side BFS in one
     # collect (identical levels by construction). The distributed loop
-    # below is the 100 TB path; the stats probe is one count.
+    # below is the 100 TB path; the probe is the bounded collect itself.
     slim = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-    if slim.limit(driver_cap_edges + 1).count() <= driver_cap_edges:
+    epdf = collect_under(slim, driver_cap_edges)
+    if epdf is not None:
         # Vectorized driver BFS: the row-at-a-time form (collect() of
         # pickled Rows + dict/deque loop + tuple-list re-upload) spent
         # its time on the Python boundary, not the traversal — Arrow
@@ -632,47 +621,23 @@ def bfs_levels(
         # batch the boundary, vectorize inside).
         import numpy as np
         import pandas as pd
+        from pyspark.sql.types import IntegerType, StructField, StructType
 
-        epdf = slim.toPandas()
         spdf = seeds.select(F.col(node_col).alias("node")).distinct().toPandas()
-        nodes_all, inv = np.unique(
-            np.concatenate([epdf["__s"].to_numpy(), epdf["__d"].to_numpy(),
-                            spdf["node"].to_numpy()]),
-            return_inverse=True,
-        )
-        ne = len(epdf)
-        Si, Di = inv[:ne], inv[ne : 2 * ne]
-        seed_idx = inv[2 * ne :]
+        nodes_all, Si, Di, seed_idx = index_nodes(epdf["__s"], epdf["__d"], spdf["node"])
         nv = len(nodes_all)
-        # CSR adjacency: edges sorted by source, offsets per node
-        order = np.argsort(Si, kind="stable")
-        Ss, Ds = Si[order], Di[order]
-        starts = np.searchsorted(Ss, np.arange(nv), side="left")
-        ends = np.searchsorted(Ss, np.arange(nv), side="right")
+        indptr, nbrs = csr(Si, Di, nv)
         level = np.full(nv, -1, dtype=np.int64)
         level[seed_idx] = 0
-        frontier = np.unique(seed_idx)
+        frontier = seed_idx
         for i in range(1, max_iters + 1):
-            if len(frontier) == 0:
-                break
-            counts = ends[frontier] - starts[frontier]
-            with_succ = frontier[counts > 0]
-            if len(with_succ) == 0:
-                break
-            # gather all successors of the frontier in one shot: expand
-            # each node's CSR run [start, end) without a Python loop
-            lens = ends[with_succ] - starts[with_succ]
-            run_starts = np.repeat(starts[with_succ], lens)
-            run_offsets = np.arange(lens.sum()) - np.repeat(
-                np.cumsum(lens) - lens, lens
-            )
-            nxt = np.unique(Ds[run_starts + run_offsets])
+            nxt = np.unique(successors(indptr, nbrs, frontier)[0])
             nxt = nxt[level[nxt] < 0]
+            if len(nxt) == 0:
+                break
             level[nxt] = i
             frontier = nxt
         reached = level >= 0
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
         node_type = seeds.select(F.col(node_col)).schema[0].dataType
         out_schema = StructType(
             [StructField("node", node_type), StructField("level", IntegerType())]
@@ -785,36 +750,21 @@ def kcore_decomposition(
     from pyspark import StorageLevel
 
     broadcast_drop_cap = 500_000  # rows; ~8 MB of bigints per side
-    a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-    b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
-    e = (
-        edges.select(a, b)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = e.count()
+    e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
 
     def _empty_degrees():
         return e.select(F.col("a").alias("n")).withColumn(
             "d", F.lit(0).cast("long")
         ).limit(0)
 
-    if 0 < n_edges <= driver_max_edges:
+    pdf = collect_under(e, driver_max_edges)
+    if pdf is not None:
         import numpy as np
         import pandas as pd
+        from pyspark.sql import types as T
 
-        pdf = e.toPandas()
         e.unpersist()
-        A = pdf["a"].to_numpy()
-        B = pdf["b"].to_numpy()
-        # Index the node ids once (hash-unique per side + one sort of the
-        # SMALL distinct set + searchsorted, instead of a full sort of
-        # the 2|E| concatenation) so every peel round is bincount +
-        # boolean gathers over contiguous int64 indices.
-        nodes_all = np.unique(np.concatenate([pd.unique(A), pd.unique(B)]))
-        Ai = np.searchsorted(nodes_all, A).astype(np.int64)
-        Bi = np.searchsorted(nodes_all, B).astype(np.int64)
+        nodes_all, Ai, Bi = index_nodes(pdf["a"], pdf["b"])
         nv = len(nodes_all)
         # No max_rounds here: that bound exists to cap DISTRIBUTED rounds
         # (each a full job); driver rounds cost microseconds and every
@@ -828,13 +778,11 @@ def kcore_decomposition(
                 break
             keep = ~(bad[Ai] | bad[Bi])
             Ai, Bi = Ai[keep], Bi[keep]
-        from pyspark.sql import types as T
-
         spark = edges.sparkSession
         node_type = e.schema["a"].dataType  # works for int and string ids
+        if len(Ai) == 0:
+            return _empty_degrees() if return_degrees else e.limit(0)
         if return_degrees:
-            if len(Ai) == 0:
-                return _empty_degrees()
             deg = np.bincount(Ai, minlength=nv) + np.bincount(Bi, minlength=nv)
             present = deg > 0
             return spark.createDataFrame(
@@ -845,8 +793,6 @@ def kcore_decomposition(
                     [T.StructField("n", node_type), T.StructField("d", T.LongType())]
                 ),
             )
-        if len(Ai) == 0:
-            return e.limit(0)
         # re-upload the surviving edges (bounded: ≤ driver_max_edges rows
         # ≈ 32 MB at the default cap) — the result carries no lineage on
         # the edge plan at all
@@ -857,6 +803,7 @@ def kcore_decomposition(
             ),
         )
 
+    n_edges = e.count()
     for _ in range(max_rounds):
         if n_edges == 0:
             return _empty_degrees() if return_degrees else e
@@ -943,46 +890,21 @@ def coreness_decomposition(
     """
     from pyspark import StorageLevel
 
-    a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-    b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
-    e = (
-        edges.select(a, b)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = e.count()
-    spark = edges.sparkSession
-    from pyspark.sql import types as T
-
-    node_type = e.schema["a"].dataType
-
-    if n_edges == 0:
-        out = e.select(F.col("a").alias("node")).withColumn(
-            "coreness", F.lit(0).cast("long")
-        ).limit(0)
-        e.unpersist()
-        return out
-
-    if n_edges <= driver_max_edges:
+    e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
+    pdf = collect_under(e, driver_max_edges)
+    if pdf is not None:
         import numpy as np
         import pandas as pd
+        from pyspark.sql import types as T
 
-        pdf = e.toPandas()
         e.unpersist()
-        A = pdf["a"].to_numpy()
-        B = pdf["b"].to_numpy()
-        # Map node ids to a contiguous [0, nv) index once (hash-unique +
-        # one sort of the small distinct set + searchsorted). Crucially
-        # the coreness array keeps a slot for EVERY node that ever had an
+        # The coreness array keeps a slot for EVERY node that ever had an
         # edge: a vertex whose entire neighborhood is peeled in one round
         # (star center next to a surviving component) is picked up by a
         # later frontier pass instead of silently vanishing from the edge
         # array (that lost-vertex bug is pinned by the star+triangle case
         # in tests/test_graph.py).
-        nodes_all = np.unique(np.concatenate([pd.unique(A), pd.unique(B)]))
-        Ai = np.searchsorted(nodes_all, A).astype(np.int64)
-        Bi = np.searchsorted(nodes_all, B).astype(np.int64)
+        nodes_all, Ai, Bi = index_nodes(pdf["a"], pdf["b"])
         nv = len(nodes_all)
         # Ascending-k FRONTIER peel over a CSR adjacency: entering level
         # k the surviving graph is the (k-1)-core; vertices removed while
@@ -993,13 +915,8 @@ def coreness_decomposition(
         # whole peel is O(E + V·passes) instead of the previous
         # O(E·passes) full bincount-and-compact per pass (measured 188
         # passes on the sf0.1 co-purchase graph: 1.96 s -> 0.32 s).
-        U = np.concatenate([Ai, Bi])
-        V = np.concatenate([Bi, Ai])
-        order = np.argsort(U, kind="stable")
-        Vs = V[order]
-        cur = np.bincount(U, minlength=nv)
-        indptr = np.zeros(nv + 1, dtype=np.int64)
-        np.cumsum(cur, out=indptr[1:])
+        indptr, nbrs = csr(np.concatenate([Ai, Bi]), np.concatenate([Bi, Ai]), nv)
+        cur = np.diff(indptr)
         coreness = np.full(nv, -1, dtype=np.int64)
         alive = np.ones(nv, dtype=bool)
         remaining = nv
@@ -1016,14 +933,15 @@ def coreness_decomposition(
                 coreness[frontier] = k - 1
                 alive[frontier] = False
                 remaining -= len(frontier)
-                segs = [Vs[indptr[f]:indptr[f + 1]] for f in frontier]
-                nb = segs[0] if len(segs) == 1 else np.concatenate(segs)
-                cur = cur - np.bincount(nb, minlength=nv)
+                cur = cur - np.bincount(successors(indptr, nbrs, frontier)[0], minlength=nv)
                 frontier = np.nonzero(alive & (cur < k))[0]
-        return spark.createDataFrame(
+        return edges.sparkSession.createDataFrame(
             pd.DataFrame({"node": nodes_all, "coreness": coreness}),
             schema=T.StructType(
-                [T.StructField("node", node_type), T.StructField("coreness", T.LongType())]
+                [
+                    T.StructField("node", e.schema["a"].dataType),
+                    T.StructField("coreness", T.LongType()),
+                ]
             ),
         )
 
@@ -1168,15 +1086,9 @@ def lpa_communities(
     """
     from pyspark.sql import Window
 
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    if driver_cap_edges and e.limit(driver_cap_edges + 1).count() <= driver_cap_edges:
+    e = canonical_edges(edges, src_col, dst_col)
+    epdf = collect_under(e, driver_cap_edges)
+    if epdf is not None:
         # Hybrid fast path (bfs/kcore/scc discipline): each synchronous
         # round costs a join + groupBy + window distributed — ~3 jobs of
         # fixed latency that dwarf the work under the cap. The update
@@ -1187,15 +1099,9 @@ def lpa_communities(
         import pandas as pd
         from pyspark.sql import types as T
 
-        epdf = e.toPandas()
         spark = edges.sparkSession
         node_type = e.schema["a"].dataType
-        nodes_all, inv = np.unique(
-            np.concatenate([epdf["a"].to_numpy(), epdf["b"].to_numpy()]),
-            return_inverse=True,
-        )
-        ne = len(epdf)
-        Ai, Bi = inv[:ne].astype(np.int64), inv[ne:].astype(np.int64)
+        nodes_all, Ai, Bi = index_nodes(epdf["a"], epdf["b"])
         U = np.concatenate([Ai, Bi])  # symmetrized
         V = np.concatenate([Bi, Ai])
         nv = np.int64(len(nodes_all))
@@ -1336,21 +1242,16 @@ def link_prediction(
     W the expanded pair volume is <= m*W/2 rows regardless of skew.
     The canonical edge list and the grouped adjacency are persisted
     (each feeds two plan branches — e: expansion + anti-join, grouped:
-    pair expansion + both degree joins); blocks are reclaimed by the
-    context cleaner when the returned plan goes out of scope.
+    pair expansion + both degree joins). On the driver path the edge
+    list is released before returning; on the distributed path both stay
+    cached for the lazy result until the caller unpersists them or
+    clears the cache.
     """
     from pyspark import StorageLevel
 
-    a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-    b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
-    e = (
-        edges.select(a, b)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = e.limit(driver_cap_edges + 1).count()
-    if n_edges <= driver_cap_edges:
+    e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
+    epdf = collect_under(e, driver_cap_edges)
+    if epdf is not None:
         # Hybrid fast path: the witness pair expansion, adjacency
         # exclusion, exact-integer Jaccard and total-order top-n are all
         # integer-deterministic, so the vectorized driver form returns
@@ -1361,36 +1262,22 @@ def link_prediction(
         import pandas as pd
         from pyspark.sql import types as T
 
-        epdf = e.toPandas()
         spark = edges.sparkSession
         node_type = e.schema["a"].dataType
-        nodes_all, inv = np.unique(
-            np.concatenate([epdf["a"].to_numpy(), epdf["b"].to_numpy()]),
-            return_inverse=True,
-        )
+        nodes_all, Ai, Bi = index_nodes(epdf["a"], epdf["b"])
         ne = len(epdf)
-        Ai, Bi = inv[:ne].astype(np.int64), inv[ne:].astype(np.int64)
         nv = np.int64(len(nodes_all))
-        W = np.concatenate([Ai, Bi])
-        N = np.concatenate([Bi, Ai])
-        deg_np = np.bincount(W, minlength=int(nv)).astype(np.int64)
         # witness expansion: neighbors sorted per witness -> p < q pairs
-        order = np.lexsort((N, W))
-        Ws, Ns = W[order], N[order]
-        wit_deg = deg_np[Ws]
+        indptr, Ns = csr(np.concatenate([Ai, Bi]), np.concatenate([Bi, Ai]), int(nv))
+        deg_np = np.diff(indptr)
+        Ws = np.repeat(np.arange(nv, dtype=np.int64), deg_np)
+        remaining = indptr[Ws + 1] - np.arange(len(Ws), dtype=np.int64) - 1
         if max_witness_degree is not None:
-            keepw = wit_deg <= int(max_witness_degree)
-            Ws, Ns = Ws[keepw], Ns[keepw]
-        pos = np.arange(len(Ws), dtype=np.int64)
-        ends = np.searchsorted(Ws, np.arange(int(nv)), side="right")
-        remaining = ends[Ws] - pos - 1
+            remaining[deg_np[Ws] > int(max_witness_degree)] = 0
         total = int(remaining.sum())
         if total <= 400_000_000:
-            firsts = np.repeat(pos, remaining)
-            offs = np.arange(total, dtype=np.int64) - np.repeat(
-                np.cumsum(remaining) - remaining, remaining
-            )
-            seconds = firsts + 1 + offs
+            firsts = np.repeat(np.arange(len(Ws), dtype=np.int64), remaining)
+            seconds = firsts + 1 + run_offsets(remaining)
             codes = Ns[firsts] * nv + Ns[seconds]
             uniq, cn = np.unique(codes, return_counts=True)
             # exclude already-adjacent pairs
@@ -1403,6 +1290,7 @@ def link_prediction(
             jp = (1000 * cn) // (da_np + db_np - cn)
             # total order: cn desc, jp desc, a asc, b asc
             sel = np.lexsort((pb, pa, -jp, -cn))[: int(top_n)]
+            e.unpersist()
             return spark.createDataFrame(
                 pd.DataFrame(
                     {
@@ -1573,40 +1461,34 @@ def sssp_weighted(
     )
     seed_nodes = seeds.select(F.col(node_col).alias("node")).distinct()
 
-    if slim.limit(driver_cap_edges + 1).count() <= driver_cap_edges:
+    epdf = collect_under(slim, driver_cap_edges)
+    if epdf is not None:
         import numpy as np
-
+        import pandas as pd
         from pyspark.sql import types as T
 
-        rows = slim.collect()
-        seed_list = [r[0] for r in seed_nodes.collect()]
-        idx: dict = {}
-        for r in rows:
-            idx.setdefault(r["__s"], len(idx))
-            idx.setdefault(r["__d"], len(idx))
-        for n in seed_list:
-            idx.setdefault(n, len(idx))
-        n_nodes = len(idx)
-        src = np.fromiter((idx[r["__s"]] for r in rows), dtype=np.int64, count=len(rows))
-        dst = np.fromiter((idx[r["__d"]] for r in rows), dtype=np.int64, count=len(rows))
-        w = np.fromiter((r["__w"] for r in rows), dtype=np.int64, count=len(rows))
+        spdf = seed_nodes.toPandas()
+        nodes_all, src, dst, seed_idx = index_nodes(epdf["__s"], epdf["__d"], spdf["node"])
+        w = epdf["__w"].to_numpy(dtype=np.int64)
         INF = np.iinfo(np.int64).max // 4
-        dist = np.full(n_nodes, INF, dtype=np.int64)
-        for n in seed_list:
-            dist[idx[n]] = 0
+        dist = np.full(len(nodes_all), INF, dtype=np.int64)
+        dist[seed_idx] = 0
         for _ in range(max_iters):
             before = dist.copy()
             cand = dist[src] + w  # INF/4 headroom: no overflow
             np.minimum.at(dist, dst, cand)
             if np.array_equal(before, dist):
                 break
-        node_type = seed_nodes.schema[0].dataType
         out_schema = T.StructType(
-            [T.StructField("node", node_type), T.StructField("dist", T.LongType())]
+            [
+                T.StructField("node", seed_nodes.schema[0].dataType),
+                T.StructField("dist", T.LongType()),
+            ]
         )
-        inv = {i: n for n, i in idx.items()}
-        data = [(inv[i], int(d)) for i, d in enumerate(dist) if d < INF]
-        return spark.createDataFrame(data, out_schema)
+        hit = dist < INF
+        return spark.createDataFrame(
+            pd.DataFrame({"node": nodes_all[hit], "dist": dist[hit]}), out_schema
+        )
 
     e = slim.repartition("__s").persist(StorageLevel.MEMORY_AND_DISK)
     # Every round state is localCheckpoint(eager=True)-ed: dists_i's plan
@@ -1792,12 +1674,12 @@ def hits_oracle_sql(edge_sql: str, iterations: int = 3) -> str:
     return "".join(parts)
 
 
-def _ktruss_driver(e: DataFrame, k: int, max_rounds: int):
-    """Driver-exact k-truss peel over the collected canonical edge list
-    ``e`` (columns a < b, distinct). Mirrors the distributed loop round
-    for round: recount in-subgraph triangle support, drop every edge with
-    support < k-2 simultaneously, stop at the first round that removes
-    nothing (returning that round's supports). Returns ``None`` if a
+def _ktruss_driver(e: DataFrame, epdf, k: int, max_rounds: int):
+    """Driver-exact k-truss peel over ``epdf``, the collected canonical
+    edge list ``e`` (columns a < b, distinct). Mirrors the distributed
+    loop round for round: recount in-subgraph triangle support, drop
+    every edge with support < k-2 simultaneously, stop at the first
+    round that removes nothing (returning that round's supports). Returns ``None`` if a
     round's wedge total exceeds the driver-array budget (caller falls
     back to the distributed joins)."""
     import numpy as np
@@ -1808,14 +1690,9 @@ def _ktruss_driver(e: DataFrame, k: int, max_rounds: int):
     out_schema = StructType(
         list(e.schema.fields) + [StructField("support", LongType())]
     )
-    epdf = e.toPandas()
-    nodes_all, inv = np.unique(
-        np.concatenate([epdf["a"].to_numpy(), epdf["b"].to_numpy()]),
-        return_inverse=True,
-    )
-    ne = len(epdf)
-    Ai, Bi = inv[:ne].astype(np.int64), inv[ne:].astype(np.int64)
+    nodes_all, Ai, Bi = index_nodes(epdf["a"], epdf["b"])
     nv = len(nodes_all)
+
     def _result(support):
         return spark.createDataFrame(
             pd.DataFrame(
@@ -1875,17 +1752,9 @@ def ktruss_decomposition(
         raise ValueError(f"k must be >= 3 for a k-truss, got {k}")
     from pyspark import StorageLevel
 
-    a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-    b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
-    e = (
-        edges.select(a, b)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = e.count()
-
-    if n_edges <= driver_cap_edges:
+    e0 = e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
+    epdf = collect_under(e, driver_cap_edges)
+    if epdf is not None:
         # Hybrid fast path (bfs_levels/coreness discipline): every peel
         # round costs ~4 scheduled jobs distributed, which dwarfs the
         # actual work under the cap. Run the SAME round-synchronous peel
@@ -1893,10 +1762,11 @@ def ktruss_decomposition(
         # edges < k-2 at once, repeat) vectorized on the driver — the
         # removal is simultaneous per round in both paths, so the
         # surviving set and final supports are identical by construction.
-        out = _ktruss_driver(e, k, max_rounds)
+        out = _ktruss_driver(e, epdf, k, max_rounds)
         if out is not None:
+            e.unpersist()
             return out
-
+    n_edges = e.count()
     for _ in range(max_rounds):
         if n_edges == 0:
             return e.withColumn("support", F.lit(0).cast("long")).limit(0)
@@ -1964,6 +1834,7 @@ def ktruss_decomposition(
         n_next = nxt.count()
         oriented.unpersist()
         if n_next == n_edges:
+            e0.unpersist()
             return nxt
         e = nxt.select("a", "b")
         n_edges = n_next
@@ -2219,14 +2090,7 @@ def degree_assortativity(
     Plan shape at scale: one groupBy(node) for degrees, two broadcast-or
     -shuffle joins to annotate edge endpoints, then ONE 1-row exact
     aggregate (sums in DECIMAL(38,0)). No iteration, no all-pairs."""
-    e0 = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e0 = canonical_edges(edges, src_col, dst_col)
     und = e0.unionByName(
         e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -2452,18 +2316,15 @@ def landmark_closeness(
         raise ValueError(f"n_landmarks must be >= 1, got {n_landmarks}")
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    e0 = (
-        edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-        .select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
+    # the canonical undirected list is what the cap counts: one row per
+    # undirected edge; the join path's symmetric ``und`` is derived lazily
+    e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
+    und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    verts = (
+        e.select(F.col("a").alias("v"))
+        .unionByName(e.select(F.col("b").alias("v")))
         .distinct()
     )
-    und = (
-        e0.unionByName(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    verts = und.select(F.col("a").alias("v")).distinct()
     lms = (
         verts.orderBy(
             F.md5(F.concat_ws(":", F.lit(seed), F.col("v").cast("string"))).asc(),
@@ -2473,34 +2334,17 @@ def landmark_closeness(
         .select(F.col("v").alias("lm"))
     )
     lcm = math.lcm(*range(1, int(max_hops) + 1))
-    if (
-        driver_cap_edges
-        and und.limit(int(driver_cap_edges) + 1).count() <= int(driver_cap_edges)
-    ):
+    epdf = collect_under(e, driver_cap_edges)
+    if epdf is not None:
         import numpy as np
         import pandas as pd
+        from pyspark.sql.types import LongType, StructField, StructType
 
-        lm_vals = [r["lm"] for r in lms.collect()]
-        epdf = und.toPandas()
-        und.unpersist()
-        ne = len(epdf)
-        nodes_all, inv = np.unique(
-            np.concatenate(
-                [
-                    epdf["a"].to_numpy(),
-                    epdf["b"].to_numpy(),
-                    np.asarray(lm_vals, dtype=epdf["a"].to_numpy().dtype),
-                ]
-            ),
-            return_inverse=True,
-        )
-        Si, Di = inv[:ne], inv[ne : 2 * ne]
-        lm_idx = inv[2 * ne :]
+        lm_vals = lms.toPandas()["lm"]
+        e.unpersist()
+        nodes_all, Ai, Bi, lm_idx = index_nodes(epdf["a"], epdf["b"], lm_vals)
         nv = len(nodes_all)
-        order = np.argsort(Si, kind="stable")
-        Ss, Ds = Si[order], Di[order]
-        starts = np.searchsorted(Ss, np.arange(nv), side="left")
-        ends = np.searchsorted(Ss, np.arange(nv), side="right")
+        indptr, nbrs = csr(np.concatenate([Ai, Bi]), np.concatenate([Bi, Ai]), nv)
         n_reached = np.zeros(nv, dtype=np.int64)
         sum_dist = np.zeros(nv, dtype=np.int64)
         harmonic = np.zeros(nv, dtype=np.int64)
@@ -2509,16 +2353,7 @@ def landmark_closeness(
             dist[int(s)] = 0
             frontier = np.array([int(s)], dtype=np.int64)
             for d in range(1, int(max_hops) + 1):
-                lens = ends[frontier] - starts[frontier]
-                keep = frontier[lens > 0]
-                if keep.size == 0:
-                    break
-                klens = ends[keep] - starts[keep]
-                run_starts = np.repeat(starts[keep], klens)
-                offs = np.arange(klens.sum()) - np.repeat(
-                    np.cumsum(klens) - klens, klens
-                )
-                nxt = np.unique(Ds[run_starts + offs])
+                nxt = np.unique(successors(indptr, nbrs, frontier)[0])
                 nxt = nxt[dist[nxt] < 0]
                 if nxt.size == 0:
                     break
@@ -2529,9 +2364,7 @@ def landmark_closeness(
             sum_dist[reached] += dist[reached]
             pos = dist >= 1
             harmonic[pos] += lcm // dist[pos]
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        node_type = und.schema[0].dataType
+        node_type = e.schema["a"].dataType
         out_schema = StructType(
             [
                 StructField("v", node_type),
@@ -2541,7 +2374,7 @@ def landmark_closeness(
             ]
         )
         hit = n_reached > 0
-        return und.sparkSession.createDataFrame(
+        return edges.sparkSession.createDataFrame(
             pd.DataFrame(
                 {
                     "v": nodes_all[hit],
@@ -2581,7 +2414,7 @@ def landmark_closeness(
             .cast("long")
         ).cast("long").alias("harmonic_num"),
     )
-    und.unpersist()
+    e.unpersist()
     return out
 
 
@@ -2885,8 +2718,8 @@ def strongly_connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_e0 = e0.count()
-    if driver_trim_max_edges and n_e0 <= int(driver_trim_max_edges):
+    epdf = collect_under(e0, driver_trim_max_edges)
+    if epdf is not None:
         # Whole-problem driver fast path: under the cap, skip the
         # distributed scaffolding entirely (vertex distinct, eager
         # checkpoints, per-phase probes — ~6 jobs of fixed latency) and
@@ -2894,21 +2727,13 @@ def strongly_connected_components(
         # collect. Identical output: scc_id = min member is a pure
         # function of the graph, and the vertex set of an edge-derived
         # graph is exactly the edge endpoints on both paths.
-        import numpy as np
         import pandas as pd
         from pyspark.sql import types as T
 
-        epdf = e0.toPandas()
         spark = edges.sparkSession
         node_type = e0.schema["s"].dataType
-        nodes_all, inv = np.unique(
-            np.concatenate([epdf["s"].to_numpy(), epdf["t"].to_numpy()]),
-            return_inverse=True,
-        )
-        ne = len(epdf)
-        labels = _scc_driver_phases(
-            inv[:ne], inv[ne:], len(nodes_all), max_phases, max_rounds
-        )
+        nodes_all, Ai, Bi = index_nodes(epdf["s"], epdf["t"])
+        labels = _scc_driver_phases(Ai, Bi, len(nodes_all), max_phases, max_rounds)
         e0.unpersist()
         return spark.createDataFrame(
             pd.DataFrame({"vertex": nodes_all, "scc_id": nodes_all[labels]}),
@@ -2983,10 +2808,8 @@ def strongly_connected_components(
         # iterating this drains the DAG portion in topological layers,
         # leaving only the cyclic cores for the (more expensive)
         # fixpoints; without it a DAG chain of k vertices costs k phases
-        if (
-            driver_trim_max_edges
-            and active_e.count() <= int(driver_trim_max_edges)
-        ):
+        epdf = collect_under(active_e, driver_trim_max_edges)
+        if epdf is not None:
             # driver path: the trim already pays the bounded collect, and
             # the result (v -> min member of its SCC) is a pure function
             # of the graph — so finish the WHOLE remaining problem on the
@@ -2996,22 +2819,11 @@ def strongly_connected_components(
             # post-trim core spent ~10 job latencies settling a
             # 25-vertex cycle). Above the cap the distributed phases
             # below remain the 100 TB path.
-            import numpy as np
             import pandas as pd
             from pyspark.sql import types as T
 
-            epdf = active_e.toPandas()
             vpdf = active_v.toPandas()
-            allv = vpdf["v"].to_numpy()
-            nodes_all, inv = np.unique(
-                np.concatenate(
-                    [allv, epdf["s"].to_numpy(), epdf["t"].to_numpy()]
-                ),
-                return_inverse=True,
-            )
-            na, ne = len(allv), len(epdf)
-            Ai = inv[na : na + ne]
-            Bi = inv[na + ne :]
+            nodes_all, _, Ai, Bi = index_nodes(vpdf["v"], epdf["s"], epdf["t"])
             labels = _scc_driver_phases(
                 Ai, Bi, len(nodes_all), max_phases, max_rounds
             )
@@ -3164,7 +2976,8 @@ def shortest_path_counts(
     slim = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
     seed_nodes = seeds.select(F.col(node_col).alias("node")).distinct()
 
-    if slim.limit(driver_cap_edges + 1).count() <= driver_cap_edges:
+    epdf = collect_under(slim, driver_cap_edges)
+    if epdf is not None:
         # Vectorized driver BFS with exact int64 σ accumulation (the
         # row-collect + dict form spent its time pickling Rows across the
         # Python boundary — same Arrow+CSR rework bfs_levels got;
@@ -3174,26 +2987,10 @@ def shortest_path_counts(
         import pandas as pd
         from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-        epdf = slim.toPandas()
         spdf = seed_nodes.toPandas()
-        nodes_all, inv = np.unique(
-            np.concatenate(
-                [
-                    epdf["__s"].to_numpy(),
-                    epdf["__d"].to_numpy(),
-                    spdf["node"].to_numpy(),
-                ]
-            ),
-            return_inverse=True,
-        )
-        ne = len(epdf)
-        Si, Di = inv[:ne], inv[ne : 2 * ne]
-        seed_idx = np.unique(inv[2 * ne :])
+        nodes_all, Si, Di, seed_idx = index_nodes(epdf["__s"], epdf["__d"], spdf["node"])
         nv = len(nodes_all)
-        order = np.argsort(Si, kind="stable")
-        Ss, Ds = Si[order], Di[order]
-        starts = np.searchsorted(Ss, np.arange(nv), side="left")
-        ends = np.searchsorted(Ss, np.arange(nv), side="right")
+        indptr, nbrs = csr(Si, Di, nv)
         dist_np = np.full(nv, -1, dtype=np.int64)
         sigma_np = np.zeros(nv, dtype=np.int64)
         dist_np[seed_idx] = 0
@@ -3202,17 +2999,8 @@ def shortest_path_counts(
         for depth in range(1, max_depth + 1):
             if len(frontier) == 0:
                 break
-            lens = ends[frontier] - starts[frontier]
-            with_succ = frontier[lens > 0]
-            lens = lens[lens > 0]
-            if len(with_succ) == 0:
-                break
-            run_starts = np.repeat(starts[with_succ], lens)
-            offs = np.arange(int(lens.sum()), dtype=np.int64) - np.repeat(
-                np.cumsum(lens) - lens, lens
-            )
-            targets = Ds[run_starts + offs]
-            wts = np.repeat(sigma_np[with_succ], lens)
+            targets, lens = successors(indptr, nbrs, frontier)
+            wts = np.repeat(sigma_np[frontier], lens)
             unreached = dist_np[targets] < 0
             t2, w2 = targets[unreached], wts[unreached]
             if len(t2) == 0:
@@ -3320,12 +3108,13 @@ def betweenness_sampled(
     slim = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
     F6 = 1_000_000
 
-    if slim.limit(driver_cap_edges + 1).count() <= driver_cap_edges:
+    epdf = collect_under(slim, driver_cap_edges)
+    if epdf is not None:
         from collections import defaultdict
 
         adj = defaultdict(list)
-        for r in slim.collect():
-            adj[r["__s"]].append(r["__d"])
+        for u, v in zip(epdf["__s"].tolist(), epdf["__d"].tolist()):
+            adj[u].append(v)
         acc: dict = {}
         for s in sources:
             dist = {s: 0}
@@ -3507,16 +3296,9 @@ def rectangle_count(
     """
     from pyspark import StorageLevel
 
-    a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-    b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
-    e = (
-        edges.select(a, b)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = e.limit(driver_cap_edges + 1).count()
-    if n_edges <= driver_cap_edges:
+    e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
+    epdf = collect_under(e, driver_cap_edges)
+    if epdf is not None:
         # Hybrid fast path (triangle_count discipline): run the SAME
         # Chiba–Nishizeki ordered-2-path enumeration vectorized on the
         # collected canonical edges; the CN bound (Σ_E min-degree ≤
@@ -3524,40 +3306,30 @@ def rectangle_count(
         # back to the distributed joins.
         import numpy as np
 
-        epdf = e.toPandas()
         spark = edges.sparkSession
-        nodes_all, inv = np.unique(
-            np.concatenate([epdf["a"].to_numpy(), epdf["b"].to_numpy()]),
-            return_inverse=True,
-        )
+        nodes_all, Ai, Bi = index_nodes(epdf["a"], epdf["b"])
         ne = len(epdf)
-        Ai, Bi = inv[:ne].astype(np.int64), inv[ne:].astype(np.int64)
         nv = np.int64(len(nodes_all))
         X = np.concatenate([Ai, Bi])
         Y = np.concatenate([Bi, Ai])
-        deg_np = np.bincount(X, minlength=int(nv))
+        indptr, nbrs = csr(X, Y, int(nv))
+        deg_np = np.diff(indptr)
         # order key: u ≺ v ⇔ (deg desc, id asc); "later" = larger key
-        key = (nv - deg_np.astype(np.int64)) * nv + np.arange(nv, dtype=np.int64)
+        key = (nv - deg_np) * nv + np.arange(nv, dtype=np.int64)
         m1 = key[Y] > key[X]  # first hop u→v with v later
         U1, V1 = X[m1], Y[m1]
-        # CSR over sym sorted by source for the v→w expansion
-        order = np.argsort(X, kind="stable")
-        Xs, Ys = X[order], Y[order]
-        ends = np.searchsorted(Xs, np.arange(int(nv)), side="right")
-        starts = np.searchsorted(Xs, np.arange(int(nv)), side="left")
-        lens = ends[V1] - starts[V1]
+        # the v→w expansion walks the CSR over sym
+        lens = deg_np[V1]
         total = int(lens.sum())
         if total <= 400_000_000:
             ru = np.repeat(U1, lens)
-            offs = np.arange(total, dtype=np.int64) - np.repeat(
-                np.cumsum(lens) - lens, lens
-            )
-            W = Ys[np.repeat(starts[V1], lens) + offs]
+            W = successors(indptr, nbrs, V1)[0]
             keep = (W != ru) & (key[W] > key[ru])
             codes = ru[keep] * nv + W[keep]
             _, cnt = np.unique(codes, return_counts=True)
             n_paths2 = int(cnt.sum())
             n_rect = int((cnt * (cnt - 1) // 2).sum())
+            e.unpersist()
             return spark.createDataFrame(
                 [(int(nv), int(ne), n_paths2, n_rect)],
                 schema="n_vertices long, n_edges long, n_paths2 long, n_rectangles long",
@@ -3692,39 +3464,22 @@ def diameter_two_sweep(
     # identical seeds, tie-breaks, caps and eccentricities by
     # construction (pinned against the distributed form in
     # tests/test_graph.py's diameter cases).
-    if edges.limit(driver_cap_edges + 1).count() <= driver_cap_edges:
+    epdf = collect_under(edges, driver_cap_edges)
+    if epdf is not None:
         import numpy as np
-        import pandas as pd
 
-        epdf = edges.toPandas()
         edges.unpersist()
         spark = edges.sparkSession
-        S = epdf[src_col].to_numpy()
-        D = epdf[dst_col].to_numpy()
-        nodes_all = np.unique(np.concatenate([pd.unique(S), pd.unique(D)]))
-        Si = np.searchsorted(nodes_all, S).astype(np.int64)
-        Di = np.searchsorted(nodes_all, D).astype(np.int64)
+        nodes_all, Si, Di = index_nodes(epdf[src_col], epdf[dst_col])
         nv = len(nodes_all)
-        order = np.argsort(Si, kind="stable")
-        Ss, Ds = Si[order], Di[order]
-        starts = np.searchsorted(Ss, np.arange(nv), side="left")
-        ends = np.searchsorted(Ss, np.arange(nv), side="right")
+        indptr, nbrs = csr(Si, Di, nv)
 
         def _bfs(seed_i: int) -> "np.ndarray":
             level = np.full(nv, -1, dtype=np.int64)
             level[seed_i] = 0
             frontier = np.array([seed_i], dtype=np.int64)
             for i in range(1, max_iters + 1):
-                lens = ends[frontier] - starts[frontier]
-                with_succ = frontier[lens > 0]
-                if len(with_succ) == 0:
-                    break
-                lens = lens[lens > 0]
-                run_starts = np.repeat(starts[with_succ], lens)
-                run_offsets = np.arange(lens.sum()) - np.repeat(
-                    np.cumsum(lens) - lens, lens
-                )
-                nxt = np.unique(Ds[run_starts + run_offsets])
+                nxt = np.unique(successors(indptr, nbrs, frontier)[0])
                 nxt = nxt[level[nxt] < 0]
                 if len(nxt) == 0:
                     break
@@ -3732,18 +3487,21 @@ def diameter_two_sweep(
                 frontier = nxt
             return level
 
-        seed1_i = 0  # nodes_all is sorted: index 0 IS the smallest node id
-        l1 = _bfs(seed1_i)
-        ecc1 = int(l1.max())
-        # farthest node, ties to the smallest id: levels ascend over the
-        # sorted node axis, so the first argmax is the smallest-id winner
-        seed2_i = int(np.argmax(l1))
-        l2 = _bfs(seed2_i)
-        ecc2 = int(l2[l2 >= 0].max())
-        n1 = nodes_all[seed1_i]
-        n2 = nodes_all[seed2_i]
-        n1 = n1.item() if hasattr(n1, "item") else n1
-        n2 = n2.item() if hasattr(n2, "item") else n2
+        n1 = n2 = None  # an empty graph has no seed: NULL seeds, ecc 0
+        ecc1 = ecc2 = 0
+        if nv:
+            seed1_i = 0  # nodes_all is sorted: index 0 IS the smallest node id
+            l1 = _bfs(seed1_i)
+            ecc1 = int(l1.max())
+            # farthest node, ties to the smallest id: levels ascend over the
+            # sorted node axis, so the first argmax is the smallest-id winner
+            seed2_i = int(np.argmax(l1))
+            l2 = _bfs(seed2_i)
+            ecc2 = int(l2[l2 >= 0].max())
+            n1 = nodes_all[seed1_i]
+            n2 = nodes_all[seed2_i]
+            n1 = n1.item() if hasattr(n1, "item") else n1
+            n2 = n2.item() if hasattr(n2, "item") else n2
         return spark.createDataFrame(
             [(n1, ecc1, n2, ecc2, max(ecc1, ecc2))],
             schema="seed1 {t}, ecc1 int, seed2 {t}, ecc2 int, diameter_lb int".format(

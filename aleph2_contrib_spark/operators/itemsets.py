@@ -25,14 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .hybrid import collect_under, index_nodes, run_offsets
 
-def _frequent_itemsets_driver(tx: DataFrame, minsup: int, max_size: int):
-    """Vectorized driver-side Apriori over the collected distinct
-    (txn, item) stream — the same level-wise counting as the distributed
-    joins (L1 support filter, within-transaction ordered pairs, pair-
-    frequent extension with downward closure), so the itemsets and exact
-    integer supports are identical by construction. Item comparisons use
-    np.unique order, which equals Spark's UTF8 binary order (UTF-8
+
+def _frequent_itemsets_driver(tx: DataFrame, pdf, minsup: int, max_size: int):
+    """Vectorized driver-side Apriori over ``pdf``, the collected distinct
+    (txn, item) stream ``tx`` — the same level-wise counting as the
+    distributed joins (L1 support filter, within-transaction ordered
+    pairs, pair-frequent extension with downward closure), so the
+    itemsets and exact integer supports are identical by construction.
+    Item comparisons use index order (``index_nodes`` sorts), which equals Spark's UTF8 binary order (UTF-8
     preserves code-point order). Returns None if the within-transaction
     pair expansion would blow the driver-array budget (caller falls back
     to the distributed joins, which spill instead)."""
@@ -42,7 +44,6 @@ def _frequent_itemsets_driver(tx: DataFrame, minsup: int, max_size: int):
 
     spark = tx.sparkSession
     item_type = tx.schema["__i"].dataType
-    pdf = tx.toPandas()
     out_schema = T.StructType(
         [
             T.StructField("size", T.IntegerType(), False),
@@ -57,10 +58,9 @@ def _frequent_itemsets_driver(tx: DataFrame, minsup: int, max_size: int):
         allf = pd.concat(frames, ignore_index=True)
         return spark.createDataFrame(allf, schema=out_schema)
 
-    items_all, icode = np.unique(pdf["__i"].to_numpy(), return_inverse=True)
-    tvals, tcode = np.unique(pdf["__t"].to_numpy(), return_inverse=True)
+    items_all, icode = index_nodes(pdf["__i"])
+    _, tcode = index_nodes(pdf["__t"])
     ni = np.int64(len(items_all))
-    icode = icode.astype(np.int64)
     # L1
     isup = np.bincount(icode, minlength=int(ni))
     l1_mask = isup >= minsup
@@ -80,7 +80,7 @@ def _frequent_itemsets_driver(tx: DataFrame, minsup: int, max_size: int):
         return _result(frames)
     # prune to frequent items, sort by (txn, item) for run expansion
     keep = l1_mask[icode]
-    Tc, Ic = tcode[keep].astype(np.int64), icode[keep]
+    Tc, Ic = tcode[keep], icode[keep]
     order = np.lexsort((Ic, Tc))
     Tc, Ic = Tc[order], Ic[order]
     pos = np.arange(len(Tc), dtype=np.int64)
@@ -90,10 +90,7 @@ def _frequent_itemsets_driver(tx: DataFrame, minsup: int, max_size: int):
     if total_pairs > 300_000_000:
         return None
     firsts = np.repeat(pos, remaining)
-    offs = np.arange(total_pairs, dtype=np.int64) - np.repeat(
-        np.cumsum(remaining) - remaining, remaining
-    )
-    seconds = firsts + 1 + offs
+    seconds = firsts + 1 + run_offsets(remaining)
     pcode = Ic[firsts] * ni + Ic[seconds]
     up, cp = np.unique(pcode, return_counts=True)
     l2_mask = cp >= minsup
@@ -127,10 +124,7 @@ def _frequent_itemsets_driver(tx: DataFrame, minsup: int, max_size: int):
     if total3:
         pf = np.repeat(f2, rem3)
         ps = np.repeat(s2, rem3)
-        offs3 = np.arange(total3, dtype=np.int64) - np.repeat(
-            np.cumsum(rem3) - rem3, rem3
-        )
-        pt = ps + 1 + offs3
+        pt = ps + 1 + run_offsets(rem3)
         c13 = Ic[pf] * ni + Ic[pt]
         c23 = Ic[ps] * ni + Ic[pt]
 
@@ -187,8 +181,9 @@ def frequent_itemsets(
     tx = transactions.select(
         F.col(txn_col).alias("__t"), F.col(item_col).alias("__i")
     ).distinct()
-    if driver_cap_rows and tx.limit(driver_cap_rows + 1).count() <= driver_cap_rows:
-        out = _frequent_itemsets_driver(tx, minsup, max_size)
+    pdf = collect_under(tx, driver_cap_rows)
+    if pdf is not None:
+        out = _frequent_itemsets_driver(tx, pdf, minsup, max_size)
         if out is not None:
             return out
 
