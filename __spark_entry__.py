@@ -62,8 +62,9 @@ def _staged_stream_chunks(
     order on the driver — the file source consumes oldest-mtime-first,
     so utime defines batch order exactly as the sequential writes did.
     An empty chunk still yields an (empty) file, preserving the previous
-    one-batch-per-chunk structure. ``chunk_idx_col`` must evaluate to
-    0..n_chunks-1."""
+    one-batch-per-chunk structure. ``chunk_idx_col`` evaluates to
+    0..n_chunks-1, or to NULL for a row that belongs to no chunk: a NULL
+    chunk drops its row, as the bounded filter it replaces did."""
     import glob
     import shutil
     import tempfile
@@ -72,6 +73,7 @@ def _staged_stream_chunks(
     stage = tempfile.mkdtemp(prefix="a2s_chunkstage_")
     (
         df.withColumn("__chunk", chunk_idx_col)
+        .filter(F.col("__chunk").isNotNull())
         .repartition(n_chunks, F.col("__chunk"))
         .write.partitionBy("__chunk")
         .mode("overwrite")
@@ -5008,12 +5010,14 @@ def streaming_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = tempfile.mkdtemp(prefix="a2s_pit_src_")
     yr = F.year(F.col("asof_date"))
     # newest years first → later micro-batches are entirely "late"
-    # (one staged job + mtime ordering, not 4 sequential write jobs)
+    # (one staged job + mtime ordering, not 4 sequential write jobs);
+    # years outside 1900-2100 fall into no chunk
     chunk = (
-        F.when(yr >= 2000, F.lit(0))
-        .when(yr >= 1998, F.lit(1))
-        .when(yr >= 1996, F.lit(2))
-        .otherwise(F.lit(3))
+        F.when(yr.between(2000, 2100), F.lit(0))
+        .when(yr.between(1998, 1999), F.lit(1))
+        .when(yr.between(1996, 1997), F.lit(2))
+        .when(yr.between(1900, 1995), F.lit(3))
+        .otherwise(F.lit(None))
     )
     _staged_stream_chunks(facts, chunk, 4, src)
 
@@ -6256,10 +6260,11 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composing to the global one (one staged job + utime ordering)
     yr = F.year("d")
     chunk = (
-        F.when(yr <= 1996, F.lit(0))
-        .when(yr <= 1998, F.lit(1))
-        .when(yr <= 2000, F.lit(2))
-        .otherwise(F.lit(3))
+        F.when(yr.between(0, 1996), F.lit(0))
+        .when(yr.between(1997, 1998), F.lit(1))
+        .when(yr.between(1999, 2000), F.lit(2))
+        .when(yr.between(2001, 9999), F.lit(3))
+        .otherwise(F.lit(None))
     )
     _staged_stream_chunks(cdc, chunk, 4, src)
     table = TransactionalTable(

@@ -29,12 +29,22 @@ never join against the existing production graph during merge
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .hybrid import canonical_edges, collect_under, csr, index_nodes, run_offsets, successors
+from .hybrid import (
+    SIGMA_MAX,
+    bfs,
+    canonical_edges,
+    collect_under,
+    csr,
+    index_nodes,
+    run_offsets,
+    successors,
+)
 
 
 @dataclass(frozen=True)
@@ -564,6 +574,93 @@ def triangle_count(
     )
 
 
+def _wavefront(
+    e: DataFrame,
+    seeds: DataFrame,
+    max_depth: int,
+    keys: Sequence[str] = (),
+    count_paths: bool = False,
+    broadcast_frontier: bool = False,
+) -> DataFrame:
+    """The distributed level-synchronous BFS of every BFS-shaped
+    operator. ``e`` is the ``(__s, __d)`` edge frame, partitioned on
+    ``__s`` and persisted once by the caller; ``seeds`` holds
+    ``(*keys, node)`` rows, and each distinct key tuple runs its own BFS
+    in the same wave. Each level is one frontier⋈edges equi-join, one
+    ``groupBy(*keys, node)`` (summing σ, the shortest-path counts, when
+    ``count_paths`` is set) and an anti-join against the nodes already
+    reached. Returns ``(*keys, node, dist[, sigma])``, one row per
+    reached key and node.
+
+    Lineage rule: each level's frontier is cut with an eager
+    ``localCheckpoint``, and the result is the union of those cut
+    frontiers, so no level's plan holds an earlier level's and the
+    result's plan has one leaf per level."""
+    cols = [*keys, "node"]
+    sig = ["sigma"] if count_paths else []
+    level = seeds.select(*cols).distinct().withColumn("dist", F.lit(0))
+    if count_paths:
+        level = level.withColumn("sigma", F.lit(1).cast("long"))
+    levels = [level.localCheckpoint(eager=True)]
+    for depth in range(1, int(max_depth) + 1):
+        f = F.broadcast(levels[-1]) if broadcast_frontier else levels[-1]
+        step = f.join(e, f["node"] == e["__s"]).select(
+            *keys, F.col("__d").alias("node"), *sig
+        )
+        step = step.groupBy(*cols).agg(F.sum("sigma").alias("sigma")) if sig else step.distinct()
+        reached = reduce(DataFrame.unionByName, [lv.select(*cols) for lv in levels])
+        frontier = (
+            step.join(reached, cols, "left_anti")
+            .select(*cols, F.lit(depth).alias("dist"), *sig)
+            .localCheckpoint(eager=True)
+        )
+        if frontier.isEmpty():
+            break
+        levels.append(frontier)
+    return reduce(DataFrame.unionByName, levels)
+
+
+def _seeded_bfs(
+    edges, seeds, src_col, dst_col, node_col, max_depth, cap, count_paths, broadcast_frontier=False
+) -> DataFrame:
+    """``(node, dist[, sigma])`` of a multi-source BFS from ``seeds``:
+    the driver kernel when the edges fit under ``cap``, else the
+    wavefront. ``dist`` is int, ``sigma`` long, on either path."""
+    from pyspark import StorageLevel
+
+    slim = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
+    seed_nodes = seeds.select(F.col(node_col).alias("node")).distinct()
+    epdf = collect_under(slim, cap)
+    if epdf is not None:
+        import pandas as pd
+        from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+        spdf = seed_nodes.toPandas()
+        nodes_all, Si, Di, seed_idx = index_nodes(epdf["__s"], epdf["__d"], spdf["node"])
+        dist, sigma = bfs(*csr(Si, Di, len(nodes_all)), seed_idx, max_depth, count_paths)
+        hit = dist >= 0
+        cols = {"node": nodes_all[hit], "dist": dist[hit].astype("int32")}
+        fields = [
+            StructField("node", seed_nodes.schema[0].dataType),
+            StructField("dist", IntegerType()),
+        ]
+        if count_paths:
+            cols["sigma"] = sigma[hit]
+            fields.append(StructField("sigma", LongType()))
+        return edges.sparkSession.createDataFrame(pd.DataFrame(cols), schema=StructType(fields))
+
+    e = slim.repartition("__s").persist(StorageLevel.MEMORY_AND_DISK)
+    out = _wavefront(
+        e, seed_nodes, max_depth, count_paths=count_paths, broadcast_frontier=broadcast_frontier
+    )
+    e.unpersist()
+    return out.select(
+        "node",
+        F.col("dist").cast("int").alias("dist"),
+        *([F.col("sigma").cast("long").alias("sigma")] if count_paths else []),
+    )
+
+
 def bfs_levels(
     edges: DataFrame,
     seeds: DataFrame,
@@ -581,120 +678,25 @@ def bfs_levels(
     traversal; this is the dataflow form a Spark cluster runs natively).
 
     Returns (node, level) for every reached node, level = exact minimum
-    hop count (0 for seeds). Deterministic: levels are integers and every
-    step is a min-aggregate — no tie-breaking needed.
+    hop count (0 for seeds). Deterministic: levels are integers and each
+    node is reached once, at its first level.
 
-    Plan shape: per round, one equi-join frontier⋈edges on the source
-    key plus a min-groupBy — the frontier (not the full level table)
-    drives each join, so round cost tracks the expanding wave, and a
-    node reached twice collapses by min. Lineage grows linearly with
-    rounds; checkpoint beyond ~20 (see pagerank). Deep-diameter graphs
-    at 100 TB want the O(log d) pointer-jumping variant
-    (dedup.connected_components) instead; BFS levels by hops are what
-    pointer jumping cannot give you.
+    Hybrid: graphs under ``driver_cap_edges`` run the driver kernel
+    (``hybrid.bfs``) over one collected CSR; larger ones run
+    :func:`_wavefront`, where per level one frontier⋈edges join on the
+    source key drives the round (cost tracks the wave, not the graph)
+    and each level's frontier is a lineage cut, so depth costs no plan
+    growth. ``broadcast_frontier=True`` broadcasts the frontier side of
+    that join — right when frontiers are known-small (seeded
+    reachability); leave it off for wavefronts that can approach the
+    graph's size. Deep-diameter graphs at 100 TB want the O(log d)
+    pointer-jumping variant (dedup.connected_components) instead; BFS
+    levels by hops are what pointer jumping cannot give you.
     """
-    from pyspark import StorageLevel
-
-    # Pre-partition the edge table on the join key ONCE: every round's
-    # frontier⋈edges then reuses this persisted partitioning and only
-    # the (small) frontier moves — otherwise each round re-shuffles the
-    # full edge table. ``broadcast_frontier=True`` removes even that
-    # exchange (right when frontiers are known-small, e.g. seeded
-    # reachability); leave it off for wavefronts that can approach the
-    # graph's size.
-    spark = edges.sparkSession
-
-    # Hybrid, like dedup.connected_components: a BFS round is a join +
-    # anti-join + count — on a SMALL graph the per-round job overhead
-    # (≥3 scheduled stages × max_iters) dwarfs the work, so graphs under
-    # ``driver_cap_edges`` solve with an exact driver-side BFS in one
-    # collect (identical levels by construction). The distributed loop
-    # below is the 100 TB path; the probe is the bounded collect itself.
-    slim = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-    epdf = collect_under(slim, driver_cap_edges)
-    if epdf is not None:
-        # Vectorized driver BFS: the row-at-a-time form (collect() of
-        # pickled Rows + dict/deque loop + tuple-list re-upload) spent
-        # its time on the Python boundary, not the traversal — Arrow
-        # both ways + numpy frontier sweeps cut the gate's driver phase
-        # from seconds to milliseconds at the 2M-edge cap (guide §4:
-        # batch the boundary, vectorize inside).
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        spdf = seeds.select(F.col(node_col).alias("node")).distinct().toPandas()
-        nodes_all, Si, Di, seed_idx = index_nodes(epdf["__s"], epdf["__d"], spdf["node"])
-        nv = len(nodes_all)
-        indptr, nbrs = csr(Si, Di, nv)
-        level = np.full(nv, -1, dtype=np.int64)
-        level[seed_idx] = 0
-        frontier = seed_idx
-        for i in range(1, max_iters + 1):
-            nxt = np.unique(successors(indptr, nbrs, frontier)[0])
-            nxt = nxt[level[nxt] < 0]
-            if len(nxt) == 0:
-                break
-            level[nxt] = i
-            frontier = nxt
-        reached = level >= 0
-        node_type = seeds.select(F.col(node_col)).schema[0].dataType
-        out_schema = StructType(
-            [StructField("node", node_type), StructField("level", IntegerType())]
-        )
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {"node": nodes_all[reached], "level": level[reached].astype("int32")}
-            ),
-            schema=out_schema,
-        )
-
-    e = (
-        slim
-        .repartition("__s")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    levels = (
-        seeds.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("level", F.lit(0))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Per-round persistence is load-bearing, not a tweak: frontier feeds
-    # both the emptiness probe and the next round, and levels feeds the
-    # anti-join of EVERY later round — unpersisted, round i re-derives
-    # rounds 1..i-1 from scratch on each branch (measured superlinear
-    # blowup). Old round states are unpersisted once the next is
-    # materialized.
-    frontier = levels
-    for i in range(1, max_iters + 1):
-        f = F.broadcast(frontier) if broadcast_frontier else frontier
-        nxt = (
-            f.join(e, f["node"] == e["__s"])
-            .select(F.col("__d").alias("node"), F.lit(i).alias("level"))
-            .distinct()
-        )
-        # new frontier: nodes not already reached at a lower level
-        frontier = (
-            nxt.join(levels, "node", "left_anti")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # one action per round: the count doubles as the emptiness probe
-        # and the materialization barrier (nxt.distinct() already bounds
-        # duplicate frontier rows; cross-round dupes are impossible —
-        # the anti-join excludes every previously reached node)
-        if frontier.count() == 0:
-            frontier.unpersist()
-            break
-        new_levels = levels.unionByName(frontier).persist(StorageLevel.MEMORY_AND_DISK)
-        levels = new_levels
-    e.unpersist()
-    # a node can appear once per reaching round pre-min; collapse here
-    return (
-        levels.groupBy("node")
-        .agg(F.min("level").alias("level"))
-        .select("node", F.col("level").cast("int").alias("level"))
-    )
+    return _seeded_bfs(
+        edges, seeds, src_col, dst_col, node_col, max_iters, driver_cap_edges,
+        count_paths=False, broadcast_frontier=broadcast_frontier,
+    ).withColumnRenamed("dist", "level")
 
 
 def kcore_decomposition(
@@ -726,8 +728,9 @@ def kcore_decomposition(
     shuffle at all — where the retention formulation paid two edge-sized
     semi-join shuffles per round. Falls back to survivor semi-joins for
     avalanche rounds that drop more than the cap. Rounds are bounded by
-    ``max_rounds`` (raises if exceeded, like connected_components); edge
-    state is persisted per round and released when the next materializes.
+    ``max_rounds`` (raises if exceeded, like connected_components); each
+    round's edge state is a lineage cut (eager ``localCheckpoint``), so
+    plans stay one round deep.
 
     Hybrid execution (the bfs_levels/connected_components contract): a
     peel whose k sits near the mean degree strips one thin shell per
@@ -825,21 +828,20 @@ def kcore_decomposition(
                 return deg.select("n", "d")
             deg.unpersist()
             return e
+        # the pruned edges are a lineage cut (eager localCheckpoint): the
+        # next round's plan holds this one as one leaf, not its history
         if n_dropped <= broadcast_drop_cap:
             pruned = (
                 e.join(F.broadcast(dropped.withColumnRenamed("n", "a")), "a", "left_anti")
                 .join(F.broadcast(dropped.withColumnRenamed("n", "b")), "b", "left_anti")
-                .select("a", "b")
-                .persist(StorageLevel.MEMORY_AND_DISK)
             )
         else:
             keep = deg.filter(F.col("d") >= k).select("n")
             pruned = (
                 e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
                 .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
-                .select("a", "b")
-                .persist(StorageLevel.MEMORY_AND_DISK)
             )
+        pruned = pruned.select("a", "b").localCheckpoint(eager=True)
         n_edges = pruned.count()
         e.unpersist()
         deg.unpersist()
@@ -952,12 +954,13 @@ def coreness_decomposition(
         .unionByName(e.select(F.col("b").alias("x"), F.col("a").alias("y")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # each round's state is a lineage cut (eager localCheckpoint): round
+    # t's plan then holds round t-1's as one leaf, not its whole history
     c = (
         und.groupBy(F.col("x").alias("n"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
-    c.count()
     e.unpersist()
     w = Window.partitionBy("n").orderBy(F.col("cv").desc())
     for _ in range(max_rounds):
@@ -967,12 +970,11 @@ def coreness_decomposition(
             .withColumn("rn", F.row_number().over(w))
             .groupBy("n")
             .agg(F.max(F.least(F.col("rn").cast("long"), F.col("cv"))).alias("c"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint(eager=True)
         )
         changed = nxt.join(c.withColumnRenamed("c", "c_prev"), "n").filter(
             F.col("c") != F.col("c_prev")
         ).count()
-        c.unpersist()
         c = nxt
         if changed == 0:
             und.unpersist()
@@ -2294,17 +2296,17 @@ def landmark_closeness(
                     caller divides at the boundary)
 
     Plan shape at 100 TB: state is (landmark, vertex, dist) — at most
-    n_landmarks · |V| rows, the explicit cost dial — and each round is
-    ONE frontier-driven equi-join on the vertex key plus ONE min-groupBy
-    (per-round persist + lineage cut, pagerank's discipline). max_hops
-    is a small constant, so total cost is h joins regardless of |V|.
-    Landmark selection is a TakeOrdered over vertex ids (driver gets
-    n_landmarks rows, never the vertex set).
+    n_landmarks · |V| rows, the explicit cost dial — built by one
+    wavefront keyed by landmark over the symmetrized edges: per hop ONE
+    frontier-driven equi-join on the vertex key, one groupBy and one
+    anti-join, each level a lineage cut. max_hops is a small constant,
+    so total cost is h joins regardless of |V|. Landmark selection is a
+    TakeOrdered over vertex ids (driver gets n_landmarks rows, never the
+    vertex set).
 
-    Below ``driver_cap_edges`` undirected edges the BFS rounds run on a
-    collected CSR adjacency instead (the bfs_levels/diameter_two_sweep
-    hybrid): h·n_landmarks numpy frontier sweeps replace 2·h shuffle
-    rounds, with identical (lm, v, min-d) state by construction —
+    Below ``driver_cap_edges`` undirected edges the BFS runs as the
+    driver kernel over a collected CSR adjacency instead, once per
+    landmark, with identical (lm, v, d) state by construction —
     landmark selection stays the distributed TakeOrdered either way.
     Set 0 to force the distributed path.
     """
@@ -2317,9 +2319,8 @@ def landmark_closeness(
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     # the canonical undirected list is what the cap counts: one row per
-    # undirected edge; the join path's symmetric ``und`` is derived lazily
+    # undirected edge; the distributed path symmetrizes it
     e = canonical_edges(edges, src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
-    und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     verts = (
         e.select(F.col("a").alias("v"))
         .unionByName(e.select(F.col("b").alias("v")))
@@ -2348,17 +2349,8 @@ def landmark_closeness(
         n_reached = np.zeros(nv, dtype=np.int64)
         sum_dist = np.zeros(nv, dtype=np.int64)
         harmonic = np.zeros(nv, dtype=np.int64)
-        for s in lm_idx:
-            dist = np.full(nv, -1, dtype=np.int64)
-            dist[int(s)] = 0
-            frontier = np.array([int(s)], dtype=np.int64)
-            for d in range(1, int(max_hops) + 1):
-                nxt = np.unique(successors(indptr, nbrs, frontier)[0])
-                nxt = nxt[dist[nxt] < 0]
-                if nxt.size == 0:
-                    break
-                dist[nxt] = d
-                frontier = nxt
+        for s in lm_idx.reshape(-1, 1):
+            dist, _ = bfs(indptr, nbrs, s, max_hops)
             reached = dist >= 0
             n_reached[reached] += 1
             sum_dist[reached] += dist[reached]
@@ -2385,37 +2377,27 @@ def landmark_closeness(
             ),
             schema=out_schema,
         )
-    state = lms.select(
-        F.col("lm"), F.col("lm").alias("v"), F.lit(0).cast("int").alias("d")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    for _ in range(int(max_hops)):
-        expand = (
-            state.join(und, state.v == und.a)
-            .select(F.col("lm"), F.col("b").alias("v"), (F.col("d") + 1).alias("d"))
-        )
-        new_state = (
-            state.unionByName(expand)
-            .groupBy("lm", "v")
-            .agg(F.min("d").cast("int").alias("d"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        new_state.count()  # materialize, then release the old round
-        state.unpersist()
-        state = new_state
+    arcs = (
+        e.select(F.col("a").alias("__s"), F.col("b").alias("__d"))
+        .unionByName(e.select(F.col("b").alias("__s"), F.col("a").alias("__d")))
+        .repartition("__s")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    state = _wavefront(arcs, lms.select("lm", F.col("lm").alias("node")), max_hops, keys=["lm"])
+    arcs.unpersist()
+    e.unpersist()
     # lcm(1..h) is divisible by every d <= h, so lcm/d is an EXACT double
     # — engine cast semantics (Spark truncates, DuckDB rounds) never see
     # a fractional value
-    out = state.groupBy("v").agg(
+    return state.groupBy(F.col("node").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("n_reached"),
-        F.sum("d").cast("long").alias("sum_dist"),
+        F.sum("dist").cast("long").alias("sum_dist"),
         F.sum(
-            F.when(F.col("d") > 0, F.lit(lcm).cast("long") / F.col("d"))
+            F.when(F.col("dist") > 0, F.lit(lcm).cast("long") / F.col("dist"))
             .otherwise(F.lit(0))
             .cast("long")
         ).cast("long").alias("harmonic_num"),
     )
-    e.unpersist()
-    return out
 
 
 def landmark_closeness_oracle_sql(
@@ -2934,11 +2916,6 @@ GROUP BY m.a
 """
 
 
-# σ bound of the driver path of shortest_path_counts: past it an int64
-# sum of path counts could wrap.
-_SIGMA_MAX = float(2**62)
-
-
 def shortest_path_counts(
     edges: DataFrame,
     seeds: DataFrame,
@@ -2962,110 +2939,13 @@ def shortest_path_counts(
     carry for magnitudes. The driver path raises OverflowError once a
     count passes 2^62 instead of letting an int64 sum wrap.
 
-    Plan shape: identical wavefront discipline to :func:`bfs_levels`
-    (whose docstring carries the reference-parity note): the edge table
-    is key-partitioned and persisted ONCE, each round is one
-    frontier⋈edges equi-join plus a sum-groupBy on the destination and
-    an anti-join against the reached set, one count action per round.
-    Small graphs (≤ ``driver_cap_edges``) solve with an exact
-    driver-side BFS — identical integers by construction.
+    Plan shape: :func:`bfs_levels`' hybrid with σ counted — the driver
+    kernel with ``count_paths``, or the wavefront summing σ in each
+    level's groupBy (one frontier⋈edges join, one sum-groupBy, one
+    anti-join and one lineage cut per level).
     """
-    from pyspark import StorageLevel
-
-    spark = edges.sparkSession
-    slim = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-    seed_nodes = seeds.select(F.col(node_col).alias("node")).distinct()
-
-    epdf = collect_under(slim, driver_cap_edges)
-    if epdf is not None:
-        # Vectorized driver BFS with exact int64 σ accumulation (the
-        # row-collect + dict form spent its time pickling Rows across the
-        # Python boundary — same Arrow+CSR rework bfs_levels got;
-        # np.add.at keeps σ exact where a float-weighted bincount would
-        # round past 2^53).
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-        spdf = seed_nodes.toPandas()
-        nodes_all, Si, Di, seed_idx = index_nodes(epdf["__s"], epdf["__d"], spdf["node"])
-        nv = len(nodes_all)
-        indptr, nbrs = csr(Si, Di, nv)
-        dist_np = np.full(nv, -1, dtype=np.int64)
-        sigma_np = np.zeros(nv, dtype=np.int64)
-        dist_np[seed_idx] = 0
-        sigma_np[seed_idx] = 1
-        frontier = seed_idx
-        for depth in range(1, max_depth + 1):
-            if len(frontier) == 0:
-                break
-            targets, lens = successors(indptr, nbrs, frontier)
-            wts = np.repeat(sigma_np[frontier], lens)
-            unreached = dist_np[targets] < 0
-            t2, w2 = targets[unreached], wts[unreached]
-            if len(t2) == 0:
-                break
-            # int64 σ sums wrap silently: bound each level's sums in float
-            # first (exact enough this far below 2^63) and refuse to wrap
-            if np.bincount(t2, weights=w2.astype(np.float64)).max() > _SIGMA_MAX:
-                raise OverflowError(
-                    f"shortest_path_counts: a shortest-path count at depth {depth} "
-                    f"exceeds 2^62 and would overflow int64 — lower max_depth"
-                )
-            acc = np.zeros(nv, dtype=np.int64)
-            np.add.at(acc, t2, w2)
-            newly = np.unique(t2)
-            dist_np[newly] = depth
-            sigma_np[newly] = acc[newly]
-            frontier = newly
-        node_type = seed_nodes.schema[0].dataType
-        out_schema = StructType(
-            [
-                StructField("node", node_type),
-                StructField("dist", IntegerType()),
-                StructField("sigma", LongType()),
-            ]
-        )
-        reached = dist_np >= 0
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "node": nodes_all[reached],
-                    "dist": dist_np[reached].astype("int32"),
-                    "sigma": sigma_np[reached],
-                }
-            ),
-            schema=out_schema,
-        )
-
-    e = slim.repartition("__s").persist(StorageLevel.MEMORY_AND_DISK)
-    reached = (
-        seed_nodes.withColumn("dist", F.lit(0))
-        .withColumn("sigma", F.lit(1).cast("long"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    frontier = reached
-    for i in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["__s"])
-            .groupBy(F.col("__d").alias("node"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("dist", F.lit(i))
-        )
-        frontier = (
-            nxt.join(reached.select("node"), "node", "left_anti")
-            .select("node", "dist", "sigma")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if frontier.count() == 0:
-            frontier.unpersist()
-            break
-        reached = reached.unionByName(frontier).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    e.unpersist()
-    return reached.select(
-        "node", F.col("dist").cast("int").alias("dist"), F.col("sigma").cast("long").alias("sigma")
+    return _seeded_bfs(
+        edges, seeds, src_col, dst_col, node_col, max_depth, driver_cap_edges, count_paths=True
     )
 
 
@@ -3093,16 +2973,20 @@ def betweenness_sampled(
     stay inside int64 — size max_depth/graph so σ ≤ ~1e6 (the same
     overflow contract :func:`shortest_path_counts` documents).
 
-    Plan shape: ALL K sources advance in ONE wavefront loop — rows are
-    (source, node) keyed, so the per-round cost is one frontier⋈edges
-    join + sum-groupBy + anti-join regardless of K, and the backward
-    pass is one level-descending join per depth, again for all sources
-    at once. Small graphs take an exact driver BFS with the identical
-    integer arithmetic (term-floored f6), so both paths agree bit-
+    Plan shape: the forward pass is the driver kernel once per source,
+    or one wavefront keyed by source, so ALL K sources advance in ONE
+    loop of one frontier⋈edges join + sum-groupBy + anti-join per level
+    regardless of K. The backward pass walks the levels deepest first,
+    one join per depth for all sources at once, and cuts each level's
+    δ with the wavefront's lineage rule (an eager ``localCheckpoint``).
+    Small graphs take the driver path with the identical integer
+    arithmetic (term-floored f6), vectorized per level, which raises
+    OverflowError rather than let an int64 wrap; both paths agree bit-
     for-bit. K is the caller's accuracy/cost dial; depth bounds both
     loops.
     """
     from pyspark import StorageLevel
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     spark = edges.sparkSession
     slim = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
@@ -3110,144 +2994,103 @@ def betweenness_sampled(
 
     epdf = collect_under(slim, driver_cap_edges)
     if epdf is not None:
-        from collections import defaultdict
+        import numpy as np
+        import pandas as pd
 
-        adj = defaultdict(list)
-        for u, v in zip(epdf["__s"].tolist(), epdf["__d"].tolist()):
-            adj[u].append(v)
-        acc: dict = {}
-        for s in sources:
-            dist = {s: 0}
-            sigma = {s: 1}
-            frontier = [s]
-            order = [s]
-            depth = 0
-            while frontier and depth < max_depth:
-                depth += 1
-                nxt: dict = {}
-                for u in frontier:
-                    for v in adj.get(u, ()):
-                        if v in dist and dist[v] < depth:
-                            continue
-                        nxt[v] = nxt.get(v, 0) + sigma[u]
-                frontier = [v for v in nxt if v not in dist]
-                for v in sorted(frontier):
-                    dist[v] = depth
-                    sigma[v] = nxt[v]
-                    order.append(v)
-            delta = {v: 0 for v in dist}
-            for v in reversed(order):
-                for w in adj.get(v, ()):
-                    if w in dist and dist[w] == dist[v] + 1:
-                        delta[v] += (sigma[v] * (F6 + delta[w])) // sigma[w]
-            for v in dist:
-                if v != s:
-                    acc[v] = acc.get(v, 0) + delta[v]
-        from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-        node_type = slim.schema[0].dataType
+        nodes_all, Si, Di, src_idx = index_nodes(epdf["__s"], epdf["__d"], list(sources))
+        nv = len(nodes_all)
+        indptr, nbrs = csr(Si, Di, nv)
+        acc = np.zeros(nv, dtype=np.int64)
+        hit = np.zeros(nv, dtype=bool)
+        for s in src_idx.reshape(-1, 1):
+            dist, sigma = bfs(indptr, nbrs, s, max_depth, count_paths=True)
+            delta = np.zeros(nv, dtype=np.int64)
+            for lv in range(int(dist.max()) - 1, -1, -1):
+                v = np.nonzero(dist == lv)[0]
+                w, lens = successors(indptr, nbrs, v)
+                v = np.repeat(v, lens)
+                on = dist[w] == lv + 1
+                v, w = v[on], w[on]
+                num = sigma[v] * (F6 + delta[w])
+                # the same terms in float bound the products and the sums
+                num_f = sigma[v] * (F6 + delta[w].astype(np.float64))
+                level_sums = np.bincount(v, num_f / sigma[w])
+                if max(num_f.max(initial=0), level_sums.max(initial=0)) > SIGMA_MAX:
+                    raise OverflowError(
+                        f"betweenness_sampled: a dependency term at depth {lv} exceeds 2^62 "
+                        "and would overflow int64; lower max_depth"
+                    )
+                np.add.at(delta, v, num // sigma[w])
+            reached = dist >= 0
+            reached[s] = False
+            acc[reached] += delta[reached]
+            if acc.min(initial=0) < 0:
+                raise OverflowError("betweenness_sampled: a betweenness sum overflows int64")
+            hit |= reached
         out_schema = StructType(
             [
-                StructField("node", node_type),
+                StructField("node", slim.schema[0].dataType),
                 StructField("betweenness_f6", LongType()),
                 StructField("n_sources", IntegerType()),
             ]
         )
         return spark.createDataFrame(
-            [(n, int(b), len(sources)) for n, b in acc.items()], out_schema
+            pd.DataFrame(
+                {
+                    "node": nodes_all[hit],
+                    "betweenness_f6": acc[hit],
+                    "n_sources": np.full(int(hit.sum()), len(sources), dtype=np.int32),
+                }
+            ),
+            schema=out_schema,
         )
 
     e = slim.repartition("__s").persist(StorageLevel.MEMORY_AND_DISK)
-    seed_rows = spark.createDataFrame(
-        [(s,) for s in sources], ["node"]
-    ).withColumn("__src", F.col("node"))
-    reached = (
-        seed_rows.select("__src", "node")
-        .withColumn("dist", F.lit(0))
-        .withColumn("sigma", F.lit(1).cast("long"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    seeds = spark.createDataFrame([(s,) for s in sources], ["node"]).withColumn(
+        "__src", F.col("node")
     )
-    frontier = reached
-    for i in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["__s"])
-            .groupBy("__src", F.col("__d").alias("node"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("dist", F.lit(i))
-        )
-        frontier = (
-            nxt.join(
-                reached.select(
-                    F.col("__src").alias("__rs"), F.col("node").alias("__rn")
-                ),
-                (nxt["__src"] == F.col("__rs")) & (nxt["node"] == F.col("__rn")),
-                "left_anti",
-            )
-            .select("__src", "node", "dist", "sigma")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if frontier.count() == 0:
-            frontier.unpersist()
-            break
-        reached = reached.unionByName(frontier).persist(StorageLevel.MEMORY_AND_DISK)
+    reached = _wavefront(e, seeds, max_depth, keys=["__src"], count_paths=True)
     # Backward accumulation, all sources at once, deepest level first.
     # A node's delta is DEFINED entirely at its own level (contributions
-    # only flow from dist+1), so each level gets its own small delta
-    # table computed from the previous one and the final answer is their
-    # union — no repeated full-table left joins (the first cut re-joined
-    # an ever-growing delta table every round; measured ~18 s of fixed
-    # overhead at toy scale from exactly that).
-    reached = reached.persist(StorageLevel.MEMORY_AND_DISK)
+    # only flow from dist+1), so each level's (node, sigma, delta) table
+    # is computed from the next level's alone, cut, and the answer is
+    # the union of the levels.
+    arcs = e.select(F.col("__s").alias("v"), F.col("__d").alias("w"))
     level_delta = reached.filter(F.col("dist") == max_depth).select(
-        "__src", "node", F.lit(0).cast("long").alias("delta")
+        "__src", "node", "sigma", F.lit(0).cast("long").alias("delta")
     )
     all_deltas = [level_delta]
-    for l in range(max_depth - 1, -1, -1):
-        lower = reached.filter(F.col("dist") == l).select(
+    for lv in range(max_depth - 1, -1, -1):
+        lower = reached.filter(F.col("dist") == lv).select(
             "__src", F.col("node").alias("v"), F.col("sigma").alias("sig_v")
         )
-        upper = (
-            reached.filter(F.col("dist") == l + 1)
-            .select("__src", F.col("node").alias("w"), F.col("sigma").alias("sig_w"))
-            .join(
-                level_delta.select("__src", F.col("node").alias("w"), "delta"),
-                ["__src", "w"],
-            )
+        upper = level_delta.select(
+            "__src", F.col("node").alias("w"), F.col("sigma").alias("sig_w"), "delta"
         )
         contrib = (
-            lower.join(e, lower["v"] == e["__s"])
-            .join(
-                upper,
-                (lower["__src"] == upper["__src"]) & (F.col("__d") == upper["w"]),
-            )
-            .groupBy(lower["__src"].alias("__src"), F.col("v").alias("node"))
-            .agg(
-                F.sum(
-                    F.expr(f"(sig_v * ({F6} + delta)) div sig_w")
-                ).alias("delta")
-            )
+            lower.join(arcs, "v")
+            .join(upper, ["__src", "w"])
+            .groupBy("__src", "v")
+            .agg(F.sum(F.expr(f"(sig_v * ({F6} + delta)) div sig_w")).alias("delta"))
         )
-        # level-l nodes with no successors at l+1 contribute delta 0
+        # level-lv nodes with no successors at lv+1 contribute delta 0
         level_delta = (
-            lower.select("__src", F.col("v").alias("node"))
-            .join(contrib, ["__src", "node"], "left")
+            lower.join(contrib, ["__src", "v"], "left")
             .select(
-                "__src", "node", F.coalesce("delta", F.lit(0)).alias("delta")
+                "__src",
+                F.col("v").alias("node"),
+                F.col("sig_v").alias("sigma"),
+                F.coalesce("delta", F.lit(0).cast("long")).alias("delta"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint(eager=True)
         )
         all_deltas.append(level_delta)
     e.unpersist()
-    delta = all_deltas[0]
-    for d in all_deltas[1:]:
-        delta = delta.unionByName(d)
     return (
-        delta.filter(F.col("node") != F.col("__src"))
+        reduce(DataFrame.unionByName, all_deltas)
+        .filter(F.col("node") != F.col("__src"))
         .groupBy("node")
-        .agg(
-            F.sum("delta").alias("betweenness_f6"),
-            F.count(F.lit(1)).alias("__n"),
-        )
+        .agg(F.sum("delta").alias("betweenness_f6"))
         .select(
             "node",
             F.col("betweenness_f6").cast("long").alias("betweenness_f6"),
@@ -3444,9 +3287,11 @@ def diameter_two_sweep(
     Returns ONE row: (seed1, ecc1, seed2, ecc2, diameter_lb) —
     diameter_lb = max(ecc1, ecc2), all exact integers.
 
-    Plan shape: two :func:`bfs_levels` waves (per round: one frontier
-    equi-join + one min-groupBy), and the farthest-node pick is a
-    1-row TakeOrdered, kept lazy via a 1-row broadcast join — no driver
+    Plan shape: two :func:`bfs_levels` calls — the driver kernel twice
+    over one collected CSR under ``driver_cap_edges``, else two
+    wavefronts (per level: one frontier equi-join, one groupBy, one
+    anti-join, one lineage cut). The farthest-node pick is a 1-row
+    TakeOrdered, kept lazy via a 1-row broadcast join — no driver
     collect in the lineage.
     """
     from pyspark import StorageLevel
@@ -3473,35 +3318,17 @@ def diameter_two_sweep(
         nodes_all, Si, Di = index_nodes(epdf[src_col], epdf[dst_col])
         nv = len(nodes_all)
         indptr, nbrs = csr(Si, Di, nv)
-
-        def _bfs(seed_i: int) -> "np.ndarray":
-            level = np.full(nv, -1, dtype=np.int64)
-            level[seed_i] = 0
-            frontier = np.array([seed_i], dtype=np.int64)
-            for i in range(1, max_iters + 1):
-                nxt = np.unique(successors(indptr, nbrs, frontier)[0])
-                nxt = nxt[level[nxt] < 0]
-                if len(nxt) == 0:
-                    break
-                level[nxt] = i
-                frontier = nxt
-            return level
-
         n1 = n2 = None  # an empty graph has no seed: NULL seeds, ecc 0
         ecc1 = ecc2 = 0
         if nv:
-            seed1_i = 0  # nodes_all is sorted: index 0 IS the smallest node id
-            l1 = _bfs(seed1_i)
+            # nodes_all is sorted: index 0 IS the smallest node id
+            l1, _ = bfs(indptr, nbrs, np.zeros(1, dtype=np.int64), max_iters)
             ecc1 = int(l1.max())
             # farthest node, ties to the smallest id: levels ascend over the
             # sorted node axis, so the first argmax is the smallest-id winner
             seed2_i = int(np.argmax(l1))
-            l2 = _bfs(seed2_i)
-            ecc2 = int(l2[l2 >= 0].max())
-            n1 = nodes_all[seed1_i]
-            n2 = nodes_all[seed2_i]
-            n1 = n1.item() if hasattr(n1, "item") else n1
-            n2 = n2.item() if hasattr(n2, "item") else n2
+            ecc2 = int(bfs(indptr, nbrs, np.array([seed2_i]), max_iters)[0].max())
+            n1, n2 = (x.item() if hasattr(x, "item") else x for x in nodes_all[[0, seed2_i]])
         return spark.createDataFrame(
             [(n1, ecc1, n2, ecc2, max(ecc1, ecc2))],
             schema="seed1 {t}, ecc1 int, seed2 {t}, ecc2 int, diameter_lb int".format(
@@ -3514,18 +3341,12 @@ def diameter_two_sweep(
         .unionByName(edges.select(F.col(dst_col).alias("node")))
     )
     seed1 = nodes.agg(F.min("node").alias("node"))
-    # l1 feeds three branches (farthest pick, ecc1, the pick again in
-    # the output row) — persist so the first BFS runs once
-    l1 = bfs_levels(edges, seed1, src_col, dst_col, max_iters=max_iters).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # the edges already exceed the cap: both sweeps run the wavefront, and
+    # l1, a union of cut levels, feeds its three branches without a rerun
+    l1 = bfs_levels(edges, seed1, src_col, dst_col, max_iters=max_iters, driver_cap_edges=0)
     seed2 = l1.orderBy(F.col("level").desc(), F.col("node").asc()).limit(1)
     l2 = bfs_levels(
-        edges,
-        seed2.select("node"),
-        src_col,
-        dst_col,
-        max_iters=max_iters,
+        edges, seed2.select("node"), src_col, dst_col, max_iters=max_iters, driver_cap_edges=0
     )
     return (
         seed1.select(F.col("node").alias("seed1"))

@@ -18,7 +18,9 @@ from its driver path.
 The remaining helpers are the numpy scaffolding the driver paths share:
 :func:`canonical_edges` (the undirected edge list both paths start
 from), :func:`index_nodes` (ids to contiguous int64 indices),
-:func:`csr` and :func:`successors` (adjacency and the frontier gather).
+:func:`csr` and :func:`successors` (adjacency and the frontier gather),
+and :func:`bfs`, the one level-synchronous BFS every BFS-shaped driver
+path runs.
 """
 
 from __future__ import annotations
@@ -100,3 +102,46 @@ def successors(indptr, nbrs, frontier):
     starts = indptr[frontier]
     lens = indptr[frontier + 1] - starts
     return nbrs[np.repeat(starts, lens) + run_offsets(lens)], lens
+
+
+# largest shortest-path count (σ) a BFS accepts: int64 sums refuse to
+# come near 2^63 rather than wrap
+SIGMA_MAX = float(2**62)
+
+
+def bfs(indptr, nbrs, seeds, max_depth: int, count_paths: bool = False):
+    """Level-synchronous BFS over the CSR ``(indptr, nbrs)`` from the
+    index array ``seeds`` to at most ``max_depth`` hops. Returns
+    ``(dist, sigma)``: ``dist[v]`` is v's hop distance (-1 unreached)
+    and, when ``count_paths`` is set, ``sigma[v]`` the exact number of
+    shortest seed→v paths (a multi-edge counts once per copy; seeds
+    have σ 1), else ``sigma`` is ``None``. σ accumulates in int64 and
+    raises ``OverflowError`` once a count passes 2^62 instead of
+    wrapping."""
+    n = len(indptr) - 1
+    dist = np.full(n, -1, dtype=np.int64)
+    dist[seeds] = 0
+    sigma = None
+    if count_paths:
+        sigma = np.zeros(n, dtype=np.int64)
+        sigma[seeds] = 1
+    frontier = np.unique(seeds)
+    for depth in range(1, int(max_depth) + 1):
+        targets, lens = successors(indptr, nbrs, frontier)
+        new = dist[targets] < 0
+        targets = targets[new]
+        if len(targets) == 0:
+            break
+        if count_paths:
+            paths = np.repeat(sigma[frontier], lens)[new]
+            # bound the level's sums in float first (exact enough this
+            # far below 2^63), then add exactly
+            if np.bincount(targets, weights=paths.astype(np.float64)).max() > SIGMA_MAX:
+                raise OverflowError(
+                    f"bfs: a shortest-path count at depth {depth} exceeds 2^62 "
+                    "and would overflow int64; lower max_depth"
+                )
+            np.add.at(sigma, targets, paths)
+        frontier = np.unique(targets)
+        dist[frontier] = depth
+    return dist, sigma

@@ -898,3 +898,31 @@ def test_runner_replayed_batch_is_a_noop(spark, tmp_path):
     assert (rows_t.latest_version(), agg_t.latest_version()) == versions
     assert rows_t.read().count() == 40
     assert sorted(tuple(r) for r in agg_t.read().collect()) == agg_before
+
+
+def test_staged_stream_chunks_null_chunk_drops_row(spark, tmp_path):
+    """A row whose chunk index is NULL (outside every bounded range) lands
+    in no chunk file; the other rows land in their chunk, and the chunk
+    files replay in index order (ascending mtime)."""
+    import __spark_entry__ as em
+
+    df = spark.createDataFrame(
+        [(1, 1995), (2, 1999), (3, 1850), (4, 2000), (5, 2150)], "id long, yr int"
+    )
+    yr = F.col("yr")
+    chunk = (
+        F.when(yr.between(1999, 2100), F.lit(0))
+        .when(yr.between(1900, 1998), F.lit(1))
+        .otherwise(F.lit(None))
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    em._staged_stream_chunks(df, chunk, 2, str(src))
+    files = sorted(os.listdir(src))
+    assert files == ["chunk_00.json", "chunk_01.json"]
+    ids = {
+        f: sorted(json.loads(line)["id"] for line in open(src / f) if line.strip())
+        for f in files
+    }
+    assert ids == {"chunk_00.json": [2, 4], "chunk_01.json": [1]}
+    assert os.path.getmtime(src / files[0]) < os.path.getmtime(src / files[1])

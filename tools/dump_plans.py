@@ -8,10 +8,12 @@ Usage: python tools/dump_plans.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from aleph2_contrib_spark.session import get_spark
 
@@ -51,7 +53,7 @@ def main() -> None:
             lines.append("```")
         except Exception as e:  # plan-only tool: record and continue
             lines.append(f"\n## {name}\nERROR: {e}\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(lines)} lines)")
 
