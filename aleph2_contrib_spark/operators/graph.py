@@ -351,6 +351,19 @@ def pagerank(
     localCheckpoint periodically (mandatory beyond ~20 rounds, where
     plan compilation, not execution, becomes the bottleneck).
     """
+    return _pagerank_rounds(
+        edges, src_col, dst_col, None, iterations, damping_permille, scale, checkpoint_every
+    )
+
+
+def _pagerank_rounds(
+    edges, src_col, dst_col, seeds, iterations, damping_permille, scale, checkpoint_every
+) -> DataFrame:
+    """The exact-integer PageRank rounds of :func:`pagerank` and
+    :func:`personalized_pagerank`, returning (node, rank_f6).
+    ``seeds=None`` starts and teleports onto every node and returns every
+    node. A list of ids restricts both to those nodes; then only nodes
+    that carry rank send contributions, and only they are returned."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -359,10 +372,16 @@ def pagerank(
     )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     base = int((1000 - damping_permille) * scale // 1000)
-    ranks = nodes.withColumn("rank_fx", F.lit(int(scale)).cast("long"))
+    start, restart = F.lit(int(scale)), F.lit(base)
+    if seeds is not None:
+        is_seed = F.col("node").isin(seeds)
+        start = F.when(is_seed, start).otherwise(F.lit(0))
+        restart = F.when(is_seed, restart).otherwise(F.lit(0))
+    ranks = nodes.withColumn("rank_fx", start.cast("long"))
     for i in range(iterations):
+        live = ranks if seeds is None else ranks.filter(F.col("rank_fx") > 0)
         contribs = (
-            ranks.join(outdeg, ranks["node"] == outdeg["src"], "inner")
+            live.join(outdeg, live["node"] == outdeg["src"], "inner")
             .join(e, "src")
             .select(
                 F.col("dst").alias("node"),
@@ -381,7 +400,7 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(base)
+                    restart
                     # exact integer fixed-point: `div` keeps the arithmetic
                     # lossless where floor(double /) would round past 2^53
                     + F.expr(f"({int(damping_permille)} * csum0) div 1000")
@@ -390,6 +409,8 @@ def pagerank(
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
             ranks = ranks.localCheckpoint(eager=False)
+    if seeds is not None:
+        ranks = ranks.filter(F.col("rank_fx") > 0)
     return ranks.select("node", F.col("rank_fx").alias("rank_f6"))
 
 
@@ -532,6 +553,27 @@ def triangle_count(
                 [(len(nodes), len(epdf), int(got[0]))],
                 schema="n_vertices long, n_edges long, n_triangles long",
             )
+    deg, oriented, tri = _oriented_triangles(e)
+    return (
+        oriented.agg(F.count(F.lit(1)).alias("n_edges"))  # |oriented| == |e|
+        .join(deg.agg(F.count(F.lit(1)).alias("n_vertices")))
+        .join(tri.agg(F.count(F.lit(1)).alias("n_triangles")))
+        .select("n_vertices", "n_edges", "n_triangles")
+    )
+
+
+def _oriented_triangles(e: DataFrame):
+    """Distributed degree-ordered triangle enumeration over the canonical
+    edge list ``e`` (a < b, distinct), shared by :func:`triangle_count`
+    and :func:`ktruss_decomposition`. Returns ``(deg, oriented, tri)``:
+    the (n, d) degree table, the oriented edges (u, v, dv) from the
+    (degree, id)-smaller endpoint u to the larger v, and one (tu, tv1,
+    tv2) row per triangle, found once from its lowest-order vertex tu.
+    ``oriented`` is persisted and materialized before ``tri`` is built
+    (why: :func:`triangle_count`); it stays cached until the caller
+    unpersists it."""
+    from pyspark import StorageLevel
+
     deg = (
         e.select(F.col("a").alias("n"))
         .unionByName(e.select(F.col("b").alias("n")))
@@ -556,22 +598,16 @@ def triangle_count(
     v1_first = (F.col("x.dv") < F.col("y.dv")) | (
         (F.col("x.dv") == F.col("y.dv")) & (F.col("x.v") < F.col("y.v"))
     )
-    wedges = (
+    tri = (
         x.join(y, F.col("x.u") == F.col("y.u"))
         .filter(F.col("x.v") != F.col("y.v"))
         .filter(v1_first)
-        .select(F.col("x.v").alias("wb"), F.col("y.v").alias("wc"))
+        .select(
+            F.col("x.u").alias("tu"), F.col("x.v").alias("tv1"), F.col("y.v").alias("tv2")
+        )
+        .join(oriented.select(F.col("u").alias("tv1"), F.col("v").alias("tv2")), ["tv1", "tv2"])
     )
-    tri = wedges.join(
-        oriented.select(F.col("u").alias("wb"), F.col("v").alias("wc")),
-        ["wb", "wc"],
-    )
-    return (
-        oriented.agg(F.count(F.lit(1)).alias("n_edges"))  # |oriented| == |e|
-        .join(deg.agg(F.count(F.lit(1)).alias("n_vertices")))
-        .join(tri.agg(F.count(F.lit(1)).alias("n_triangles")))
-        .select("n_vertices", "n_edges", "n_triangles")
-    )
+    return deg, oriented, tri
 
 
 def _wavefront(
@@ -1772,47 +1808,7 @@ def ktruss_decomposition(
     for _ in range(max_rounds):
         if n_edges == 0:
             return e.withColumn("support", F.lit(0).cast("long")).limit(0)
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionByName(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        ed = e.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a").join(
-            deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b"
-        )
-        a_first = (F.col("da") < F.col("db")) | (
-            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-        )
-        oriented = ed.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # Materialize BEFORE the consuming plan is built: oriented feeds
-        # three branches (both wedge sides + the closing join), and a lazy
-        # persist leaves them racing to compute the same degree-join
-        # subtree inside one job (the triangle_count fix, measured 20.4 →
-        # 11.9 s there) — here it recurs EVERY peel round.
-        oriented.count()
-        x, y = oriented.alias("x"), oriented.alias("y")
-        v1_first = (F.col("x.dv") < F.col("y.dv")) | (
-            (F.col("x.dv") == F.col("y.dv")) & (F.col("x.v") < F.col("y.v"))
-        )
-        tri = (
-            x.join(y, F.col("x.u") == F.col("y.u"))
-            .filter(F.col("x.v") != F.col("y.v"))
-            .filter(v1_first)
-            .select(
-                F.col("x.u").alias("tu"),
-                F.col("x.v").alias("tv1"),
-                F.col("y.v").alias("tv2"),
-            )
-            .join(
-                oriented.select(F.col("u").alias("tv1"), F.col("v").alias("tv2")),
-                ["tv1", "tv2"],
-            )
-        )
+        _, oriented, tri = _oriented_triangles(e)
 
         def _edge(p, q):
             return tri.select(
@@ -1910,47 +1906,9 @@ def personalized_pagerank(
     """
     if not seeds:
         raise ValueError("personalized_pagerank requires at least one seed")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base = int((1000 - damping_permille) * scale // 1000)
     seed_list = [str(s) for s in seeds]
-    is_seed = F.col("node").isin(seed_list)
-    ranks = nodes.withColumn(
-        "rank_fx",
-        F.when(is_seed, F.lit(int(scale))).otherwise(F.lit(0)).cast("long"),
-    )
-    for i in range(iterations):
-        live = ranks.filter(F.col("rank_fx") > 0)
-        contribs = (
-            live.join(outdeg, live["node"] == outdeg["src"], "inner")
-            .join(e, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fx div outdeg").cast("long").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("csum"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .withColumn("csum0", F.coalesce(F.col("csum"), F.lit(0)).cast("long"))
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
-                    + F.expr(f"({int(damping_permille)} * csum0) div 1000")
-                ).cast("long").alias("rank_fx"),
-            )
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.filter(F.col("rank_fx") > 0).select(
-        "node", F.col("rank_fx").alias("rank_f6")
+    return _pagerank_rounds(
+        edges, src_col, dst_col, seed_list, iterations, damping_permille, scale, checkpoint_every
     )
 
 
@@ -2676,22 +2634,24 @@ def strongly_connected_components(
     rather than silently spinning (raise the cap for condensation-deep
     graphs; Tarjan on a driver is the right tool below ~1e6 edges).
 
-    Hybrid TRIM (the kcore_decomposition / bfs_levels contract): the
-    trim drains the DAG mass one topological LAYER per round, and each
-    distributed round is a full Spark job — a 68-layer chain measured
-    32 s of pure job latency at sf0.1 while the fixpoints took 2 s. So
-    when the active subgraph is ≤ ``driver_trim_max_edges`` canonical
-    edges (2M ≈ 32 MB of int64 pairs, sized to
-    spark.driver.maxResultSize; 0 disables), the peel-to-fixpoint runs
-    on the driver over two numpy arrays — the whole layer sequence
-    vectorized, sub-second — and only the trimmed singleton set and the
-    surviving subgraph are re-uploaded (both bounded by the cap). The
-    FW-BW min-label fixpoints — the part whose state is corpus-sized at
-    100 TB — ALWAYS run distributed; above the cap the trim also runs
-    distributed (one probe-folded job per layer). Identical unique
-    fixpoint on either path.
+    Hybrid (the kcore_decomposition / bfs_levels contract): the trim
+    drains the DAG mass one topological LAYER per round, and each
+    distributed round is a Spark job — a 68-layer chain measured 32 s of
+    pure job latency at sf0.1 while the fixpoints took 2 s. So at the
+    start of every phase, when the active subgraph is ≤
+    ``driver_trim_max_edges`` distinct directed edges (2M ≈ 32 MB of
+    int64 pairs, sized to spark.driver.maxResultSize; 0 disables), one
+    bounded collect hands the WHOLE remaining solve — trim, FW-BW
+    fixpoints and peels — to the driver's vectorized min-label phases
+    (:func:`_scc_driver_phases`). Under the cap that happens in phase 1,
+    so the graph is solved on the driver with one collect; above it,
+    phases run distributed (one count per trim layer, one per fixpoint
+    round) until the remaining subgraph fits. Identical unique fixpoint
+    on either path.
     """
+    import pandas as pd
     from pyspark import StorageLevel
+    from pyspark.sql import types as T
 
     e0 = (
         edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
@@ -2700,38 +2660,7 @@ def strongly_connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    epdf = collect_under(e0, driver_trim_max_edges)
-    if epdf is not None:
-        # Whole-problem driver fast path: under the cap, skip the
-        # distributed scaffolding entirely (vertex distinct, eager
-        # checkpoints, per-phase probes — ~6 jobs of fixed latency) and
-        # solve with the vectorized min-label phases on ONE bounded
-        # collect. Identical output: scc_id = min member is a pure
-        # function of the graph, and the vertex set of an edge-derived
-        # graph is exactly the edge endpoints on both paths.
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        spark = edges.sparkSession
-        node_type = e0.schema["s"].dataType
-        nodes_all, Ai, Bi = index_nodes(epdf["s"], epdf["t"])
-        labels = _scc_driver_phases(Ai, Bi, len(nodes_all), max_phases, max_rounds)
-        e0.unpersist()
-        return spark.createDataFrame(
-            pd.DataFrame({"vertex": nodes_all, "scc_id": nodes_all[labels]}),
-            schema=T.StructType(
-                [
-                    T.StructField("vertex", node_type),
-                    T.StructField("scc_id", node_type),
-                ]
-            ),
-        )
-    verts = (
-        e0.select(F.col("s").alias("v"))
-        .unionByName(e0.select(F.col("t").alias("v")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    node_type = e0.schema["s"].dataType
 
     def min_fixpoint(vs, es, forward: bool):
         # L(v) = min id reachable from v along es (forward) or along
@@ -2779,86 +2708,68 @@ def strongly_connected_components(
             f"SCC min-label fixpoint did not converge in {max_rounds} rounds"
         )
 
-    result = None
-    active_v = verts.localCheckpoint(eager=True)
-    active_e = e0.localCheckpoint(eager=True)
-    for _ in range(int(max_phases)):
-        if active_v.limit(1).count() == 0:
-            break
-        # TRIM (the standard FW-BW companion): a vertex with no in-edge
-        # or no out-edge in the active subgraph is a singleton SCC —
-        # iterating this drains the DAG portion in topological layers,
-        # leaving only the cyclic cores for the (more expensive)
-        # fixpoints; without it a DAG chain of k vertices costs k phases
+    def restrict(es, s_ids, t_ids, how):
+        # named-column joins against renamed single-column frames (one
+        # shared DF in two join conditions resolves ambiguously and
+        # measured 150 s on 8 edges). The cut is lazy: the caller's next
+        # action (a count, the bounded collect) materializes it in its own
+        # job, so phases never chain lineage.
+        return (
+            es.join(s_ids.toDF("s"), "s", how)
+            .join(t_ids.toDF("t"), "t", how)
+            .localCheckpoint(eager=False)
+        )
+
+    # The active state is the edge list alone. Every vertex that no phase
+    # settles is a singleton SCC: the trim drops the edges of vertices with
+    # no in-edge or no out-edge, and a vertex left without active edges
+    # has its whole SCC among the unsettled vertices, so it is alone in
+    # it. Those vertices are named once, at the end.
+    result, active_e = None, e0
+    for phase in range(int(max_phases)):
         epdf = collect_under(active_e, driver_trim_max_edges)
         if epdf is not None:
-            # driver path: the trim already pays the bounded collect, and
-            # the result (v -> min member of its SCC) is a pure function
-            # of the graph — so finish the WHOLE remaining problem on the
-            # driver with the same vectorized min-label phases instead of
-            # re-uploading the subgraph and paying one Spark job per
-            # distributed fixpoint round (measured: the sf0.1 gate's
-            # post-trim core spent ~10 job latencies settling a
-            # 25-vertex cycle). Above the cap the distributed phases
-            # below remain the 100 TB path.
-            import pandas as pd
-            from pyspark.sql import types as T
-
-            vpdf = active_v.toPandas()
-            nodes_all, _, Ai, Bi = index_nodes(vpdf["v"], epdf["s"], epdf["t"])
-            labels = _scc_driver_phases(
-                Ai, Bi, len(nodes_all), max_phases, max_rounds
-            )
-            spark = edges.sparkSession
-            node_type = active_v.schema["v"].dataType
-            settled_all = spark.createDataFrame(
-                pd.DataFrame(
-                    {"v": nodes_all, "scc_id": nodes_all[labels]}
-                ),
+            # Driver path: under the cap, finish the WHOLE remaining
+            # problem with the vectorized min-label phases on this one
+            # bounded collect instead of paying Spark jobs per trim layer
+            # and per fixpoint round (measured: the sf0.1 gate's post-trim
+            # core spent ~10 job latencies settling a 25-vertex cycle). In
+            # phase 1 that is the whole graph. scc_id = min member is a
+            # pure function of the graph, so both paths give identical rows.
+            nodes_all, Ai, Bi = index_nodes(epdf["s"], epdf["t"])
+            labels = _scc_driver_phases(Ai, Bi, len(nodes_all), max_phases, max_rounds)
+            settled = edges.sparkSession.createDataFrame(
+                pd.DataFrame({"v": nodes_all, "scc_id": nodes_all[labels]}),
                 schema=T.StructType(
-                    [
-                        T.StructField("v", node_type),
-                        T.StructField("scc_id", node_type),
-                    ]
+                    [T.StructField("v", node_type), T.StructField("scc_id", node_type)]
                 ),
             )
-            result = (
-                settled_all
-                if result is None
-                else result.unionByName(settled_all)
-            )
+            if phase == 0:
+                e0.unpersist()
+                return settled.select(F.col("v").alias("vertex"), "scc_id")
+            result = result.unionByName(settled)
             break
-        else:
-            for _ in range(int(max_rounds)):
-                has_out = active_e.select(F.col("s").alias("v")).distinct()
-                has_in = active_e.select(F.col("t").alias("v")).distinct()
-                both = has_out.join(has_in, "v")
-                # lazy checkpoint + count in ONE job (same fold as the
-                # fixpoint probe): the count both materializes the
-                # round's singleton set and answers "anything to trim?"
-                single = active_v.join(both, "v", "left_anti").localCheckpoint(
-                    eager=False
-                )
-                if single.count() == 0:
-                    break
-                settled1 = single.select("v", F.col("v").alias("scc_id"))
-                result = (
-                    settled1 if result is None else result.unionByName(settled1)
-                )
-                active_v = active_v.join(single, "v", "left_anti").localCheckpoint(
-                    eager=True
-                )
-                active_e = (
-                    active_e.join(
-                        single.select(F.col("v").alias("s")), "s", "left_anti"
-                    )
-                    .join(single.select(F.col("v").alias("t")), "t", "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-        if active_v.limit(1).count() == 0:
+        # TRIM (the standard FW-BW companion): keep the edges whose source
+        # has an in-edge and whose target has an out-edge; iterating this
+        # drains the DAG portion in topological layers, leaving only the
+        # cyclic cores for the (more expensive) fixpoints. One job per
+        # layer: its count materializes the layer and answers "anything
+        # trimmed?" (the edge set only shrinks).
+        n, before = active_e.count(), None
+        for _ in range(int(max_rounds)):
+            if n in (0, before):
+                break
+            active_e = restrict(active_e, active_e.select("t"), active_e.select("s"), "left_semi")
+            n, before = active_e.count(), n
+        if n == 0:
             break
-        fwd = min_fixpoint(active_v, active_e, forward=True)
-        bwd = min_fixpoint(active_v, active_e, forward=False)
+        vs = (
+            active_e.select(F.col("s").alias("v"))
+            .unionByName(active_e.select(F.col("t").alias("v")))
+            .distinct()
+        )
+        fwd = min_fixpoint(vs, active_e, forward=True)
+        bwd = min_fixpoint(vs, active_e, forward=False)
         settled = (
             fwd.join(bwd.withColumnRenamed("lab", "blab"), "v")
             .filter(F.col("lab") == F.col("blab"))
@@ -2866,30 +2777,23 @@ def strongly_connected_components(
             .localCheckpoint(eager=True)
         )
         result = settled if result is None else result.unionByName(settled)
-        # peel: named-column anti-joins against two renamed copies of the
-        # settled set (one shared DF in two join conditions resolves
-        # ambiguously and measured 150 s on 8 edges); checkpoint the new
-        # state so phases never chain lineage
-        active_v = active_v.join(settled.select("v"), "v", "left_anti").localCheckpoint(
-            eager=True
-        )
-        active_e = (
-            active_e.join(settled.select(F.col("v").alias("s")), "s", "left_anti")
-            .join(settled.select(F.col("v").alias("t")), "t", "left_anti")
-            .localCheckpoint(eager=True)
-        )
+        active_e = restrict(active_e, settled.select("v"), settled.select("v"), "left_anti")
     else:
-        if active_v.limit(1).count() > 0:
+        if active_e.limit(1).count() > 0:
             raise RuntimeError(
                 f"SCC peeling did not finish in {max_phases} phases "
                 "(adversarial SCC-chain ordering — raise max_phases)"
             )
+    singles = (
+        e0.select(F.col("s").alias("v"))
+        .unionByName(e0.select(F.col("t").alias("v")))
+        .distinct()
+    )
+    if result is not None:
+        singles = singles.join(result.select("v"), "v", "left_anti")
+    singles = singles.select("v", F.col("v").alias("scc_id")).localCheckpoint(eager=True)
     e0.unpersist()
-    verts.unpersist()
-    if result is None:  # empty graph
-        return verts.select(
-            F.col("v").alias("vertex"), F.col("v").alias("scc_id")
-        ).limit(0)
+    result = singles if result is None else result.unionByName(singles)
     return result.select(F.col("v").alias("vertex"), F.col("scc_id"))
 
 

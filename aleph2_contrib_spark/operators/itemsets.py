@@ -257,14 +257,13 @@ def frequent_itemsets(
     return out.unionByName(l3.select(F.lit(3).alias("size"), "i1", "i2", "i3", "support"))
 
 
-def frequent_itemsets_oracle_sql(txn_sql: str, minsup: int, max_size: int = 3) -> str:
-    """DuckDB replica of :func:`frequent_itemsets`. ``txn_sql`` must yield
-    (txn_id, item); same Apriori joins spelled in ANSI SQL."""
-    if not 1 <= max_size <= 3:
-        raise ValueError(f"max_size must be in 1..3, got {max_size}")
-    sql = f"""
+def _apriori_ctes(txn_sql: str, minsup: int, extra: str = "") -> str:
+    """The ``WITH`` clause both Apriori oracles share: the distinct
+    transactions ``tx``, then the ``extra`` CTE text, then the frequent
+    levels ``l1``, ``l2``, ``l3`` (ending at ``l3``'s closing paren)."""
+    return f"""
 WITH tx AS MATERIALIZED (SELECT DISTINCT txn_id AS t, item AS i FROM ({txn_sql})),
-l1 AS MATERIALIZED (
+{extra}l1 AS MATERIALIZED (
     SELECT i, count(*) AS support FROM tx GROUP BY i HAVING count(*) >= {minsup}
 ),
 txf AS MATERIALIZED (SELECT tx.t, tx.i FROM tx JOIN l1 ON tx.i = l1.i),
@@ -284,7 +283,15 @@ l3 AS MATERIALIZED (
     WHERE EXISTS (SELECT 1 FROM l2 x WHERE x.i1 = p.i1 AND x.i2 = c.i)
       AND EXISTS (SELECT 1 FROM l2 x WHERE x.i1 = p.i2 AND x.i2 = c.i)
     GROUP BY p.i1, p.i2, c.i HAVING count(*) >= {minsup}
-)
+)"""
+
+
+def frequent_itemsets_oracle_sql(txn_sql: str, minsup: int, max_size: int = 3) -> str:
+    """DuckDB replica of :func:`frequent_itemsets`. ``txn_sql`` must yield
+    (txn_id, item); same Apriori joins spelled in ANSI SQL."""
+    if not 1 <= max_size <= 3:
+        raise ValueError(f"max_size must be in 1..3, got {max_size}")
+    sql = _apriori_ctes(txn_sql, minsup) + """
 SELECT 1 AS size, i AS i1, CAST(NULL AS VARCHAR) AS i2, CAST(NULL AS VARCHAR) AS i3,
        support FROM l1
 """
@@ -433,30 +440,8 @@ def association_rules_oracle_sql(
 ) -> str:
     """DuckDB replica of :func:`association_rules` (same Apriori CTEs, same
     integer-ppm arithmetic)."""
-    return f"""
-WITH tx AS MATERIALIZED (SELECT DISTINCT txn_id AS t, item AS i FROM ({txn_sql})),
-n AS MATERIALIZED (SELECT count(DISTINCT t) AS n_txns FROM tx),
-l1 AS MATERIALIZED (
-    SELECT i, count(*) AS support FROM tx GROUP BY i HAVING count(*) >= {minsup}
-),
-txf AS MATERIALIZED (SELECT tx.t, tx.i FROM tx JOIN l1 ON tx.i = l1.i),
-pair_occ AS MATERIALIZED (
-    SELECT a.t, a.i AS i1, b.i AS i2
-    FROM txf a JOIN txf b ON a.t = b.t AND a.i < b.i
-),
-l2 AS MATERIALIZED (
-    SELECT i1, i2, count(*) AS support FROM pair_occ
-    GROUP BY i1, i2 HAVING count(*) >= {minsup}
-),
-l3 AS MATERIALIZED (
-    SELECT p.i1, p.i2, c.i AS i3, count(*) AS support
-    FROM pair_occ p
-    JOIN l2 ON p.i1 = l2.i1 AND p.i2 = l2.i2
-    JOIN txf c ON c.t = p.t AND c.i > p.i2
-    WHERE EXISTS (SELECT 1 FROM l2 x WHERE x.i1 = p.i1 AND x.i2 = c.i)
-      AND EXISTS (SELECT 1 FROM l2 x WHERE x.i1 = p.i2 AND x.i2 = c.i)
-    GROUP BY p.i1, p.i2, c.i HAVING count(*) >= {minsup}
-),
+    n = "n AS MATERIALIZED (SELECT count(DISTINCT t) AS n_txns FROM tx),\n"
+    return _apriori_ctes(txn_sql, minsup, n) + f""",
 t3 AS (
     SELECT l3.*,
            a1.support AS s1, a2.support AS s2, a3.support AS s3,

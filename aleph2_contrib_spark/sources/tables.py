@@ -80,19 +80,44 @@ TABLE_NAMES = (
 )
 
 
+def _ts_is_nanos(path: str) -> bool:
+    """Whether the parquet footer at ``path`` (a file, or the first part
+    file of a directory) stores ``ts`` as TIMESTAMP(NANOS). Reads one
+    footer with pyarrow, no Spark job. A footer that cannot be read here
+    (say, a remote path) counts as nanos, so such a table still loads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        if os.path.isdir(path):
+            parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+            if not parts:
+                return False
+            path = os.path.join(path, parts[0])
+        schema = pq.read_schema(path)
+    except (OSError, pa.ArrowException):
+        return True
+    if "ts" not in schema.names:
+        return False
+    ts = schema.field("ts").type
+    return pa.types.is_timestamp(ts) and ts.unit == "ns"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS). Depending on the Spark
-        # version this reads natively as TIMESTAMP_NTZ (4.1+) or needs the
-        # legacy nanos-as-long conf and a manual micros conversion. Handle
-        # both so callers always see a timestamp-typed ts.
+    if name == "events" and _ts_is_nanos(path):
+        # Spark 4.1 refuses parquet TIMESTAMP(NANOS) with
+        # PARQUET_TYPE_ILLEGAL unless the legacy nanos-as-long conf is set;
+        # with it, ts reads as a bigint of nanoseconds, converted here to
+        # micros with exact integer division. The conf is session-wide,
+        # so it is set only for a file that needs it (the test data stores
+        # timestamp[us], which Spark reads natively).
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_parquet_cached(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return _read_parquet_cached(spark, path)
 
