@@ -13,8 +13,8 @@ _group_ids = itertools.count()
 
 
 def _jobs(spark, fn):
-    """Run ``fn`` under a fresh job group; return (its result, the number
-    of Spark jobs it launched)."""
+    """Run ``fn`` under a fresh job group; return (its result, the group
+    id, whose jobs :func:`_group_jobs` counts)."""
     sc = spark.sparkContext
     gid = f"test-graph-shared-{next(_group_ids)}"
     sc.setJobGroup(gid, gid)
